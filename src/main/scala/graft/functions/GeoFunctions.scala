@@ -167,6 +167,93 @@ object GeoFunctions extends Serializable {
     }
   }
 
+  /** Stats keys of one feature (A3): its `geometry.type` and its anchor
+    * position, the first (lon, lat) pair of `geometry.coordinates` at any
+    * nesting depth.
+    */
+  final case class StatsKeys(geometryType: String, lon: Option[Double], lat: Option[Double])
+
+  private val NoKeys = StatsKeys(null, None, None)
+
+  /** Stats keys of a feature tree, equal to what `get_json_object` plus a
+    * leading-number match yield over the feature's SERIALIZED form, so a
+    * stats row does not depend on where it is computed:
+    *  - `geometry.type`: a string is its text, any other non-null value
+    *    its compact JSON; missing or null → null;
+    *  - anchor: descend through leading arrays to the first element of the
+    *    innermost one; lon is that element if it is a number, lat the
+    *    element right after it if lon is set and it is a number (`[lon]`
+    *    → lat null). Empty or leading-empty arrays, non-number first
+    *    elements and non-array coordinates → both null. A non-finite
+    *    double serializes as a JSON string, so it counts as no number.
+    *  - coordinates given as a JSON string are scanned as text, the way
+    *    the serialized form of any other value would be.
+    */
+  def statsKeys(feature: JsonNode): StatsKeys = {
+    val geometry = if (feature != null && feature.isObject) feature.get("geometry") else null
+    if (geometry == null || !geometry.isObject) return NoKeys
+    val coords = geometry.get("coordinates")
+    val (lon, lat) =
+      if (coords == null) (None, None)
+      else if (coords.isTextual) anchorOfText(coords.textValue)
+      else if (coords.isArray) {
+        var arr = coords
+        while (arr.size > 0 && arr.get(0).isArray) arr = arr.get(0)
+        val lon = anchorNumber(arr.get(0))
+        (lon, if (lon.isEmpty) None else anchorNumber(arr.get(1)))
+      } else (None, None)
+    StatsKeys(pathText(geometry.get("type")), lon, lat)
+  }
+
+  /** Stats keys of a serialized feature; unparseable JSON has none. */
+  def statsKeys(featureJson: String): StatsKeys =
+    if (featureJson == null) NoKeys
+    else try statsKeys(mapper.readTree(featureJson))
+    catch { case _: Exception => NoKeys }
+
+  private def nonFinite(n: JsonNode): Boolean =
+    n.isFloatingPointNumber && !java.lang.Double.isFinite(n.asDouble)
+
+  /** `get_json_object` rendering of one value. */
+  private def pathText(n: JsonNode): String =
+    if (n == null || n.isNull) null
+    else if (n.isTextual) n.textValue
+    else if (nonFinite(n)) n.asText // written as a JSON string: "Infinity"
+    else mapper.writeValueAsString(n)
+
+  private def anchorNumber(n: JsonNode): Option[Double] =
+    if (n == null || !n.isNumber || nonFinite(n)) None else Some(n.asDouble)
+
+  /** The leading-number scan over coordinates held as text: one or more
+    * `[`, whitespace, a run of number characters (lon); then whitespace,
+    * `,`, whitespace and a second run (lat). A run that does not parse as
+    * a double is null; lat is read even when lon does not parse.
+    */
+  private def anchorOfText(s: String): (Option[Double], Option[Double]) = {
+    var i = 0
+    def skipSpace(): Unit =
+      while (i < s.length && " \t\n\u000B\f\r".indexOf(s.charAt(i).toInt) >= 0) i += 1
+    def run(): String = {
+      val from = i
+      while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i).toInt) >= 0) i += 1
+      s.substring(from, i)
+    }
+    def number(t: String): Option[Double] =
+      try Some(java.lang.Double.parseDouble(t))
+      catch { case _: NumberFormatException => None }
+    while (i < s.length && s.charAt(i) == '[') i += 1
+    if (i == 0) return (None, None)
+    skipSpace()
+    val lon = run()
+    if (lon.isEmpty) return (None, None)
+    skipSpace()
+    if (i >= s.length || s.charAt(i) != ',') return (number(lon), None)
+    i += 1
+    skipSpace()
+    val lat = run()
+    (number(lon), if (lat.isEmpty) None else number(lat))
+  }
+
   /** Convenience for tests/queries: first Z as a Double (post-strip
     * elevation the reference would record), null if absent.
     */
@@ -189,11 +276,14 @@ object GeoFunctions extends Serializable {
   val stripZUdf = udf((c: String) => stripZJson(c))
   val processGeometryUdf = udf((f: String, l: String) => processGeometry(f, l))
   val firstElevationUdf = udf((c: String) => firstElevation(c))
+  val statsKeysUdf = udf((f: String) => statsKeys(f))
 
   def strip_z(c: Column): Column = stripZUdf(c)
   def process_geometry(feature: Column, layer: Column): Column =
     processGeometryUdf(feature, layer)
   def first_elevation(coords: Column): Column = firstElevationUdf(coords)
+  /** Struct of [[StatsKeys]] (`geometryType`, `lon`, `lat`) of a feature. */
+  def stats_keys(feature: Column): Column = statsKeysUdf(feature)
 
   /** Register SQL-callable names on a session. */
   def register(spark: SparkSession): Unit = {

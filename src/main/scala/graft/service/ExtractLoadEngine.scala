@@ -1,10 +1,11 @@
 package graft.service
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.GeoFunctions
 import graft.model.{Layer, LoadResponse, QueueMessage}
 import graft.sinks.Warehouse
 import graft.sources.GeoJsonZipSource
@@ -16,21 +17,30 @@ import graft.sources.GeoJsonZipSource
   *   1. pre-clean the dataset's rows (A1; partition delete),
   *   2. streamed ZIP/GeoJSON expansion with the geometry transform (P7)
   *      FUSED into the parse loop (one Jackson parse + one serialize per
-  *      feature — never parse-serialize-reparse),
-  *   3. per-layer writes to `content_*` tables (partitioned by dataset
-  *      id, dynamic overwrite),
+  *      feature — never parse-serialize-reparse); each feature record
+  *      carries its typed stats keys (geometry type, anchor lon/lat),
+  *   3. feature writes to `content_*` tables (partitioned by dataset id;
+  *      the six plain tables in one staged write, see `Warehouse`),
   *   4. header metadata → `dataset` row (K8) and `extension_file` rows
   *      (K9; ids are a per-dataset dense sequence in archive entry
   *      order — the reference's DB sequence is opaque, so the contract
   *      here is ours),
-  *   5. stats refresh (A3; computed from the cached parse, one shuffle),
+  *   5. stats refresh (A3; rows from the same aggregation as step 3's
+  *      layer counts),
   *   6. success/failure response (K10).
   *
-  * Spark-action budget per load: ONE aggregation over the cached parse
-  * (layer/kind counts — replaces the reference-era per-layer isEmpty
-  * probes), ONE small header collect (rows ≈ entries per archive,
-  * bounded by archive layout, not data volume), one write per non-empty
-  * layer, one stats agg, two metadata writes, one response append.
+  * Spark-action budget per load: 7 jobs for a load with plain and
+  * extension layers. Each job carries a fixed cost that at these sizes
+  * outweighs its data work, so the budget is counted in jobs:
+  *   - ONE collect over the cached parse (it also builds the cache),
+  *     grouped by entry, layer, kind and geometry type inside each task —
+  *     no shuffle. Its few rows (≈ entries × geometry types, bounded by
+  *     archive layout, not data volume) answer the "any `.geojson`
+  *     entry" check, the live layers, the header rows and the stats rows;
+  *   - ONE staged write of all plain feature tables, plus one write of
+  *     `content_extension` when that layer is live;
+  *   - two metadata writes, one stats write from a local frame, one
+  *     response append.
   *
   * Failure anywhere → failure response; a replay overwrites the same
   * partitions, which is how the reference's transaction-rollback intent
@@ -44,8 +54,9 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   // ---- A2: per-stage wall-clock metrics ---------------------------------
   // The reference times every stage (`console.time` at
   // `extract-load-service.ts:301,322,327-336,360,...`); same points here:
-  // pre_clean (A1), parse_count (the one counts action), write_features
-  // (all layer writes), metadata (K8/K9), stats (A3), process_files total.
+  // pre_clean (A1), parse_count (the one parse aggregation, stats bounds
+  // included), write_features (all layer writes), metadata (K8/K9), stats
+  // (A3, the stats-row write), process_files total.
   private val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
 
   /** Stage wall times (seconds) of the most recent load on this engine. */
@@ -97,63 +108,58 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     timed("pre_clean")(warehouse.deleteDatasetRecords(datasetId))
 
     // 2. streamed source with the geometry transform fused in.
-    val parsed = GeoJsonZipSource.read(spark, msg.data.file_upload_path, transform = true)
+    val archives = GeoJsonZipSource.archives(spark, msg.data.file_upload_path)
+    val parsed = GeoJsonZipSource.read(spark, archives, transform = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE action: per-(layer, kind) counts. Presence of any header row
-      // ⇔ at least one valid .geojson entry; feature counts decide which
-      // layer tables get a write.
-      val counts: Map[(String, String), Long] = timed("parse_count")(parsed
-        .groupBy($"layer", $"kind").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
-      if (!counts.keys.exists(_._2 == "header"))
+      // ONE action over the parse: per entry and geometry type, counts,
+      // anchor bounds and the entry's header. Grouped inside each task
+      // (an entry never leaves its archive's task), so no shuffle.
+      val entries = timed("parse_count")(parsed
+        .select($"zip_path", $"entry_path", $"entry_seq", $"layer", $"kind",
+          $"geometry_type", $"anchor_lon", $"anchor_lat", $"header")
+        .rdd.mapPartitions(ExtractLoadEngine.groupEntries).collect().toSeq)
+
+      // Header rows, one per entry, in archive then entry order.
+      val headers = entries.filter(_.kind == "header")
+        .sortBy(e => (archives.indexOf(e.zipPath), e.entrySeq))
+      if (headers.isEmpty)
         throw new RuntimeException("No valid .geojson files found in dataset archive.")
-      val featureCount: String => Long = l => counts.getOrElse((l, "feature"), 0L)
-
-      val features = parsed.filter($"kind" === "feature")
-
-      // Header rows: one per entry — bounded by archive layout (a few
-      // entries per ZIP), safe to collect.
-      val headers = parsed.filter($"kind" === "header")
-        .select($"entry_path", $"entry_seq", $"layer", $"header")
-        .collect()
-        .sortBy(_.getAs[Int]("entry_seq"))
+      val featureGroups = entries.filter(_.kind == "feature")
+      val liveLayers = featureGroups.map(_.layer).toSet
 
       // Extension-file id allocation: dense per-dataset sequence in entry
       // order (driver-side; the reference memoizes the DB-generated id,
       // `extract-load-service.ts:59,123,456-458`).
-      val extEntries = headers.filter(_.getAs[String]("layer") == "extension")
+      val extEntries = headers.filter(_.layer == Layer.Extension.name)
       val extIds: Map[String, Int] =
-        extEntries.zipWithIndex.map { case (r, i) => r.getString(0) -> (i + 1) }.toMap
+        extEntries.zipWithIndex.map { case (e, i) => e.entryPath -> (i + 1) }.toMap
 
-      // 3. per-layer feature writes (K1–K7) — no isEmpty probes: the
-      // single counts aggregation already told us which layers are live.
-      Layer.all.foreach { layer =>
-        if (featureCount(layer.name) > 0) {
-          val slice = features.filter($"layer" === layer.name)
-          val out =
-            if (layer == Layer.Extension) {
-              val idMap = typedLit(extIds)
-              slice.select(
-                lit(datasetId).as("tdei_dataset_id"),
-                element_at(idMap, $"entry_path").as("ext_file_id"),
-                $"feature",
-                lit(userId).as("requested_by"))
-            } else
-              slice.select(
-                lit(datasetId).as("tdei_dataset_id"),
-                $"feature",
-                lit(userId).as("requested_by"))
-          timed("write_features")(warehouse.writeFeatures(layer.table, out))
-        }
+      // 3. feature writes (K1–K7), only for live layers.
+      val features = parsed.filter($"kind" === "feature")
+      timed("write_features") {
+        if (liveLayers.exists(_ != Layer.Extension.name))
+          warehouse.writeFeaturesStaged(features
+            .filter($"layer" =!= Layer.Extension.name)
+            .select(element_at(typedLit(tableByLayer), $"layer").as("layer_table"),
+              lit(datasetId).as("tdei_dataset_id"),
+              $"feature",
+              lit(userId).as("requested_by")))
+        if (liveLayers.contains(Layer.Extension.name))
+          warehouse.writeFeatures(Layer.Extension.table, features
+            .filter($"layer" === Layer.Extension.name)
+            .select(lit(datasetId).as("tdei_dataset_id"),
+              element_at(typedLit(extIds), $"entry_path").as("ext_file_id"),
+              $"feature",
+              lit(userId).as("requested_by")))
       }
 
       // 4a. dataset metadata row (K8): last entry per layer wins, matching
       // the reference's sequential per-entry UPDATEs.
       val infoByLayer: Map[String, String] =
-        headers.filter(_.getAs[String]("layer") != "extension").map { r =>
-          r.getAs[String]("layer") -> additionalInfo(r.getAs[String]("header"))
-        }.toMap // toMap keeps the LAST value per key
+        headers.filter(_.layer != Layer.Extension.name)
+          .map(e => e.layer -> additionalInfo(e.header))
+          .toMap // toMap keeps the LAST value per key
 
       val metaCols = Layer.routingOrder.map { l =>
         lit(infoByLayer.get(l.name).orNull).cast(StringType).as(l.metaColumn.get)
@@ -164,21 +170,23 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
 
       // 4b. extension_file rows (K9): name = basename sans extension.
       if (extEntries.nonEmpty) {
-        val rows = extEntries.map { r =>
-          val path = r.getString(0)
-          (extIds(path), baseNameNoExt(path),
-            additionalInfo(r.getAs[String]("header")), userId)
-        }.toSeq
+        val rows = extEntries.map { e =>
+          (extIds(e.entryPath), baseNameNoExt(e.entryPath),
+            additionalInfo(e.header), userId)
+        }
         val extDf = rows.toDF("id", "name", "file_meta", "requested_by")
           .withColumn("tdei_dataset_id", lit(datasetId))
         timed("metadata")(warehouse.upsertByDataset("extension_file", extDf))
       }
 
-      // 5. stats refresh (A3) — from the cached parse, not a table re-read.
-      if (Layer.all.exists(l => featureCount(l.name) > 0))
-        timed("stats")(updateStats(datasetId, features))
+      // 5. stats refresh (A3) — merged from the per-entry groups.
+      if (featureGroups.nonEmpty)
+        timed("stats")(updateStats(datasetId, featureGroups))
     } finally parsed.unpersist()
   }
+
+  private val tableByLayer: Map[String, String] =
+    Layer.all.map(l => l.name -> l.table).toMap
 
   /** Header map minus `features`/`type` (`extract-load-service.ts:494-502`),
     * serialized as the JSON written to the dataset-info columns.
@@ -198,45 +206,26 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     if (dot > 0) base.substring(0, dot) else base
   }
 
-  /** Anchor position of a feature: the first (lon, lat) pair in its
-    * coordinates tree at any nesting depth — the basis for the stats
-    * bbox (SURVEY A3: count + min/max lon/lat). Regex over the
-    * coordinates JSON: skip leading '['s, capture the first two
-    * numbers.
-    */
-  private def anchor(featureJson: org.apache.spark.sql.Column) = {
-    val coords = get_json_object(featureJson, "$.geometry.coordinates")
-    // number class includes exponent signs ("1.0E-5"); try_cast because a
-    // geometry-less/malformed feature yields "" and ANSI cast would fail
-    // the whole stats job for one bad row
-    val num = "[-+0-9.eE]+"
-    val lon = regexp_extract(coords,
-      s"^\\[+\\s*($num)", 1).try_cast("double")
-    val lat = regexp_extract(coords,
-      s"^\\[+\\s*$num\\s*,\\s*($num)", 1).try_cast("double")
-    (lon, lat)
-  }
-
   /** A3 replacement: the reference calls an opaque stored procedure
     * (`content.tdei_update_osw_stats`); this engine's contract is a
     * per-dataset aggregation — feature counts per layer table and
-    * geometry type, plus the bounding box of feature anchor positions.
-    * One shuffle (the groupBy), partial aggregation map-side, computed
-    * from the already-cached parsed features.
+    * geometry type, plus the bounding box of feature anchor positions
+    * (`GeoFunctions.statsKeys`). A load merges its per-entry groups on
+    * the driver (a few rows) and writes them from a local frame.
     */
   private def updateStats(datasetId: String,
-      features: org.apache.spark.sql.Dataset[graft.sources.ParsedRecord]): Unit = {
-    val tableByLayer = typedLit(Layer.all.map(l => l.name -> l.table).toMap)
-    val (lon, lat) = anchor($"feature")
-    val stats = features
-      .select(element_at(tableByLayer, $"layer").as("layer_table"),
-        get_json_object($"feature", "$.geometry.type").as("geometry_type"),
-        lon.as("__lon"), lat.as("__lat"))
-      .groupBy($"layer_table", $"geometry_type")
-      .agg(count(lit(1)).as("feature_count"),
-        min($"__lon").as("min_lon"), max($"__lon").as("max_lon"),
-        min($"__lat").as("min_lat"), max($"__lat").as("max_lat"))
+      groups: Seq[ExtractLoadEngine.EntryGroup]): Unit = {
+    import ExtractLoadEngine.{greatest, least}
+    val rows = groups.groupBy(g => (tableByLayer(g.layer), g.geometryType)).toSeq
+      .map { case ((table, geometryType), gs) =>
+        (table, geometryType, gs.map(_.count).sum,
+          gs.map(_.minLon).reduce(least), gs.map(_.maxLon).reduce(greatest),
+          gs.map(_.minLat).reduce(least), gs.map(_.maxLat).reduce(greatest))
+      }
+    val stats = rows.toDF("layer_table", "geometry_type", "feature_count",
+        "min_lon", "max_lon", "min_lat", "max_lat")
       .withColumn("tdei_dataset_id", lit(datasetId))
+      .coalesce(1)
     warehouse.upsertByDataset("stats", stats)
   }
 
@@ -246,21 +235,77 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   def updateStats(datasetId: String): Unit = {
     val perLayer = Layer.all.map(_.table).distinct.flatMap { t =>
       if (warehouse.partitionExists(t, datasetId)) {
-        val (lon, lat) = anchor($"feature")
         Some(spark.read.schema(warehouse.tableSchema(t)).parquet(warehouse.partitionPath(t, datasetId))
-          .select(lit(t).as("layer_table"),
-            get_json_object($"feature", "$.geometry.type").as("geometry_type"),
-            lon.as("__lon"), lat.as("__lat")))
+          .select(lit(t).as("layer_table"), GeoFunctions.stats_keys($"feature").as("k")))
       } else None
     }
     if (perLayer.isEmpty) return
     val all = perLayer.reduce(_ unionAll _)
     val stats = all
-      .groupBy($"layer_table", $"geometry_type")
+      .groupBy($"layer_table", $"k.geometryType".as("geometry_type"))
       .agg(count(lit(1)).as("feature_count"),
-        min($"__lon").as("min_lon"), max($"__lon").as("max_lon"),
-        min($"__lat").as("min_lat"), max($"__lat").as("max_lat"))
+        min($"k.lon").as("min_lon"), max($"k.lon").as("max_lon"),
+        min($"k.lat").as("min_lat"), max($"k.lat").as("max_lat"))
       .withColumn("tdei_dataset_id", lit(datasetId))
     warehouse.upsertByDataset("stats", stats)
+  }
+}
+
+object ExtractLoadEngine {
+
+  /** A load's parse rows of one entry, layer, kind and geometry type, as
+    * grouped by one task: feature count and anchor bounds, or (`kind` =
+    * header) the entry's header row.
+    */
+  final case class EntryGroup(
+      zipPath: String,
+      entryPath: String,
+      entrySeq: Int,
+      layer: String,
+      kind: String,
+      geometryType: String,
+      count: Long,
+      minLon: Option[Double],
+      maxLon: Option[Double],
+      minLat: Option[Double],
+      maxLat: Option[Double],
+      header: String)
+
+  /** Null-skipping bounds; ties keep the first value, as Spark's min/max do. */
+  private def least(a: Option[Double], b: Option[Double]): Option[Double] =
+    (a, b) match {
+      case (Some(x), Some(y)) => if (y < x) b else a
+      case _ => a.orElse(b)
+    }
+  private def greatest(a: Option[Double], b: Option[Double]): Option[Double] =
+    (a, b) match {
+      case (Some(x), Some(y)) => if (y > x) b else a
+      case _ => a.orElse(b)
+    }
+
+  /** Groups one partition of (zip_path, entry_path, entry_seq, layer,
+    * kind, geometry_type, anchor_lon, anchor_lat, header) rows. A group
+    * split over several partitions comes back as several rows; every
+    * consumer merges by key, and a header is a single row.
+    */
+  private def groupEntries(rows: Iterator[Row]): Iterator[EntryGroup] = {
+    val groups = scala.collection.mutable.LinkedHashMap[
+      (String, String, Int, String, String, String), EntryGroup]()
+    rows.foreach { r =>
+      val key = (r.getString(0), r.getString(1), r.getInt(2), r.getString(3),
+        r.getString(4), r.getString(5))
+      val lon = if (r.isNullAt(6)) None else Some(r.getDouble(6))
+      val lat = if (r.isNullAt(7)) None else Some(r.getDouble(7))
+      groups(key) = groups.get(key) match {
+        case Some(g) =>
+          g.copy(count = g.count + 1,
+            minLon = least(g.minLon, lon), maxLon = greatest(g.maxLon, lon),
+            minLat = least(g.minLat, lat), maxLat = greatest(g.maxLat, lat))
+        case None =>
+          EntryGroup(key._1, key._2, key._3, key._4, key._5, key._6,
+            1L, lon, lon, lat, lat, r.getString(8))
+      }
+    }
+    groups.valuesIterator
   }
 }

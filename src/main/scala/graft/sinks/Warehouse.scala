@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 
 import graft.model.Layer
@@ -9,23 +10,39 @@ import graft.model.Layer
 /** Table layout of the engine — the Spark-native replacement for the
   * reference's Postgres `content.*` schema.
   *
-  * Every per-feature table is parquet partitioned by `tdei_dataset_id`,
-  * written with dynamic partition overwrite. That makes a re-load of the
-  * same dataset idempotent — the Spark idiom replacing the reference's
-  * `delete_dataset_records_by_id($1)` pre-clean + transactional reload
-  * (`src/service/extract-load-service.ts:291-295`,
+  * Every per-feature table is parquet partitioned by `tdei_dataset_id`;
+  * a load replaces exactly the partitions it produces. That makes a
+  * re-load of the same dataset idempotent — the Spark idiom replacing the
+  * reference's `delete_dataset_records_by_id($1)` pre-clean +
+  * transactional reload (`src/service/extract-load-service.ts:291-295`,
   * `src/database/data-source.ts:33-65`). Replays overwrite exactly the
   * partitions they produce, so a failed load is repaired by re-running —
   * the at-least-once story the queue semantics require.
   *
+  * Staged promote commit (`writeFeaturesStaged`): the six plain feature
+  * tables of one load are written by ONE job into a private staging root
+  * `<root>/_staging/<uuid>`, partitioned by (`layer_table`,
+  * `tdei_dataset_id`). Only after that job succeeds is each partition
+  * directory renamed into `content_<table>/`, the same delete, mkdirs,
+  * rename steps Spark's dynamic partition overwrite commit performs. So
+  * no content partition of a load is visible before its write job has
+  * succeeded, and a failed job leaves nothing behind (the staging root is
+  * always removed). Keyed metadata tables and `content_extension` (its
+  * extra `ext_file_id` column) use dynamic partition overwrite directly.
+  *
+  * Partition directory names use Spark's own path escaping
+  * (`ds:1` → `tdei_dataset_id=ds%3A1`): `partitionPath` builds that name
+  * for pre-clean and reads, and the promote moves the names Spark wrote,
+  * both through `partitionDir`, so each finds what the other made.
+  *
   * Every table has a FIXED schema (the reference's DDL is fixed too), so
   * reads never rely on parquet schema inference: a table whose last
-  * partition was deleted (only `_SUCCESS` left) reads as an empty,
-  * correctly-typed DataFrame instead of failing schema inference.
+  * partition was deleted reads as an empty, correctly-typed DataFrame
+  * instead of failing schema inference.
   *
   * Scale note: partitioning by dataset id means a 1000-executor load of N
   * archives touches only its own partitions (no global shuffle, no table
-  * lock); per-layer writes are narrow maps over the parsed records.
+  * lock); feature writes are narrow maps over the parsed records.
   */
 final class Warehouse(spark: SparkSession, val root: String) {
 
@@ -35,13 +52,47 @@ final class Warehouse(spark: SparkSession, val root: String) {
 
   def tableSchema(name: String): StructType = Warehouse.schemas(name)
 
-  /** content.node / edge / zone / extension_* feature tables. */
+  /** One feature table (content.extension), dynamic partition overwrite. */
   def writeFeatures(table: String, df: DataFrame): Unit =
     df.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("tdei_dataset_id")
       .parquet(tablePath(table))
+
+  /** Several feature tables in one write job, then a staged promote (see
+    * the class doc). `df` holds `layer_table` (the target table) and
+    * `tdei_dataset_id` next to the table's own columns; each table's
+    * files hold just those own columns, as a direct write would.
+    */
+  def writeFeaturesStaged(df: DataFrame): Unit = {
+    val staging = new Path(s"$root/_staging/${java.util.UUID.randomUUID()}")
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      df.write.partitionBy("layer_table", "tdei_dataset_id").parquet(staging.toString)
+      promote(fs, staging)
+    } finally fs.delete(staging, true)
+  }
+
+  /** Moves every `layer_table=<t>/<partition>` directory of a finished
+    * staged write to `content_<t>/<partition>`, keeping the directory name
+    * Spark produced. Same steps as Spark's dynamic-overwrite commit:
+    * delete the target, create its parent if missing, rename; a failed
+    * rename fails the load.
+    */
+  private def promote(fs: FileSystem, staging: Path): Unit =
+    fs.listStatus(staging).filter(_.isDirectory).foreach { tableDir =>
+      val table = ExternalCatalogUtils.unescapePathName(
+        tableDir.getPath.getName.stripPrefix("layer_table="))
+      fs.listStatus(tableDir.getPath).filter(_.isDirectory).foreach { part =>
+        val target = partitionDir(table, part.getPath.getName)
+        if (!fs.delete(target, true) && !fs.exists(target.getParent))
+          fs.mkdirs(target.getParent)
+        if (!fs.rename(part.getPath, target))
+          throw new java.io.IOException(
+            s"Failed to rename ${part.getPath} to $target when promoting staged partitions")
+      }
+    }
 
   /** Per-dataset overwrite for keyed metadata tables (dataset, stats,
     * extension_file): one partition per dataset id = an upsert.
@@ -188,9 +239,16 @@ final class Warehouse(spark: SparkSession, val root: String) {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Path of one dataset's partition within a table. */
+  /** One partition directory of a table, by its on-disk name. */
+  private def partitionDir(table: String, dirName: String): Path =
+    new Path(tablePath(table), dirName)
+
+  /** Path of one dataset's partition within a table, escaped the way
+    * Spark names it on write.
+    */
   def partitionPath(table: String, datasetId: String): String =
-    s"${tablePath(table)}/tdei_dataset_id=$datasetId"
+    partitionDir(table,
+      ExternalCatalogUtils.getPartitionPathString("tdei_dataset_id", datasetId)).toString
 
   def partitionExists(table: String, datasetId: String): Boolean = {
     val p = new Path(partitionPath(table, datasetId))
@@ -208,7 +266,7 @@ final class Warehouse(spark: SparkSession, val root: String) {
     val tables = Layer.all.map(_.table).distinct ++
       Seq("extension_file", "dataset", "stats")
     tables.foreach { t =>
-      val dir = new Path(s"${tablePath(t)}/tdei_dataset_id=$datasetId")
+      val dir = new Path(partitionPath(t, datasetId))
       val fs = dir.getFileSystem(hconf)
       if (fs.exists(dir)) fs.delete(dir, true)
     }

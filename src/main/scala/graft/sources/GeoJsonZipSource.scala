@@ -6,8 +6,7 @@ import java.util.zip.ZipInputStream
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -21,6 +20,11 @@ import graft.model.Layer
   * its features; root-level scalar header keys as a JSON object in
   * `header` — the reference's single-pass header capture, including keys
   * that appear AFTER the `features` array).
+  *
+  * A feature record also carries its stats keys (`geometry_type`,
+  * `anchor_lon`, `anchor_lat`; see `GeoFunctions.statsKeys`), read from
+  * the tree the parse already built, so stats never re-parse `feature`.
+  * They are null on header records.
   */
 final case class ParsedRecord(
     zip_path: String,
@@ -29,7 +33,10 @@ final case class ParsedRecord(
     layer: String,
     kind: String,
     feature: String,
-    header: String
+    header: String,
+    geometry_type: String,
+    anchor_lon: Option[Double],
+    anchor_lat: Option[Double]
 )
 
 /** ZIP + GeoJSON source (reference S2–S7).
@@ -41,10 +48,14 @@ final case class ParsedRecord(
   * each task opens a Hadoop `FSDataInputStream` and walks a lazy
   * ZipInputStream/Jackson-streaming iterator — the archive is NEVER
   * materialized in memory, so a 50 GB ZIP costs the same executor memory
-  * as a 5 MB one (one feature tree at a time). Parallelism comes from
-  * *many archives* (one row each) — at 100 TB the unit of work is the
-  * archive, matching the reference's job-per-ZIP model; a single ZIP is
-  * inherently serial in both systems (central-directory-less stream).
+  * as a 5 MB one (one feature tree at a time).
+  *
+  * Parallelism: the resolved path list is sliced straight into
+  * `min(archives, defaultParallelism)` partitions (`parallelize`: no
+  * shuffle, no extra job), so each task streams one archive while
+  * archives ≤ cores. The unit of work is the archive, matching the
+  * reference's job-per-ZIP model; a single ZIP is one task, since a
+  * streamed ZIP has no central directory to split on.
   *
   * With `transform = true` the per-feature geometry rewrite (P7) is FUSED
   * into the parse loop: the feature tree Jackson just built is rewritten
@@ -66,19 +77,28 @@ object GeoJsonZipSource {
   def isGeoJsonEntry(path: String): Boolean =
     path.endsWith(".geojson") && !path.contains("__MACOSX/")
 
+  /** Archive files named by a path, glob or directory, in resolution
+    * order (the order [[read]] gives them to tasks).
+    */
+  def archives(spark: SparkSession, path: String): Seq[String] =
+    StreamUtil.resolveFiles(spark, path)
+
   /** Read one or more ZIP archives (path, glob, or directory) into a
     * DataFrame of ParsedRecord, streaming each archive from the
     * filesystem — no whole-file materialization.
     */
   def read(spark: SparkSession, path: String,
-      transform: Boolean = false): Dataset[ParsedRecord] = {
+      transform: Boolean = false): Dataset[ParsedRecord] =
+    read(spark, archives(spark, path), transform)
+
+  /** Read already-resolved archive files (parallelism: see the object doc). */
+  def read(spark: SparkSession, files: Seq[String],
+      transform: Boolean): Dataset[ParsedRecord] = {
     import spark.implicits._
-    val files = resolvePaths(spark, path)
     val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val parallelism =
       math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism) // one archive per task when archives ≤ cores
+    spark.createDataset(spark.sparkContext.parallelize(files, parallelism))
       .flatMap { p =>
         val fsPath = new Path(p)
         val fs = fsPath.getFileSystem(hconf.value)
@@ -91,22 +111,6 @@ object GeoJsonZipSource {
           _.addTaskCompletionListener[Unit](_ => zin.close()))
         closeOnExhaustion(expandZipStream(p, zin, transform), zin)
       }
-  }
-
-  /** Driver-side resolution of a path/glob/directory into archive files.
-    * One driver RPC per load — the per-archive bytes stay on executors.
-    */
-  private def resolvePaths(spark: SparkSession, path: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matched: Seq[FileStatus] = Option(fs.globStatus(p)) match {
-      case None | Some(Array()) => throw new java.io.FileNotFoundException(path)
-      case Some(arr) => arr.toSeq
-    }
-    matched.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-      else Seq(st)
-    }.map(_.getPath.toString)
   }
 
   /** Expand a (path, content) DataFrame of already-materialized ZIP blobs
@@ -191,8 +195,10 @@ object GeoJsonZipSource {
             else {
               var node = mapper.readTree[com.fasterxml.jackson.databind.JsonNode](parser)
               if (transform) node = GeoFunctions.processGeometryNode(node, layer)
+              val keys = GeoFunctions.statsKeys(node)
               nextRec = ParsedRecord(zipPath, entryPath, entrySeq, layer,
-                "feature", mapper.writeValueAsString(node), null)
+                "feature", mapper.writeValueAsString(node), null,
+                keys.geometryType, keys.lon, keys.lat)
             }
           } else {
             val t = parser.nextToken()
@@ -200,7 +206,7 @@ object GeoJsonZipSource {
               if (!headerEmitted) {
                 headerEmitted = true
                 nextRec = ParsedRecord(zipPath, entryPath, entrySeq, layer,
-                  "header", null, mapper.writeValueAsString(header))
+                  "header", null, mapper.writeValueAsString(header), null, None, None)
               } else return
             } else if (!rootStarted) {
               // tolerate any root shape; only objects produce fields

@@ -4,6 +4,8 @@ import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -254,5 +256,159 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ds = engine.warehouse.table("dataset").collect()(0)
     assert(ds.getAs[String]("node_info") == """{"name":"second"}""")
     assert(engine.warehouse.table("node").count() == 2)
+  }
+
+  /** One entry per layer: nodes, edges, points, lines, polygons, zones
+    * and an extension file.
+    */
+  private val sevenLayerZip = zipBytes(
+    "nodes.geojson" -> fc(Seq(point(1, 2, Some(3.0), "n1"), point(-1, -2, None, "n2"))),
+    "edges.geojson" -> fc(Seq(
+      """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[1.0,2.0],[3.0,4.0]]},"properties":{"_id":"e1"}}"""),
+      header = Map("name" -> "\"edges\"")),
+    "points.geojson" -> fc(Seq(point(5, 6, Some(7.0), "p1"))),
+    "lines.geojson" -> fc(Seq(
+      """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[0.5,0.5],[1.5,1.5]]},"properties":{"_id":"l1"}}""")),
+    "polygons.geojson" -> fc(Seq(
+      """{"type":"Feature","geometry":{"type":"Polygon","coordinates":[[[0.0,0.0],[1.0,0.0],[1.0,1.0],[0.0,0.0]]]},"properties":{"_id":"g1"}}""")),
+    "zones.geojson" -> fc(Seq(
+      """{"type":"Feature","geometry":{"type":"Polygon","coordinates":[[[2.0,2.0],[3.0,2.0],[3.0,3.0],[2.0,2.0]]]},"properties":{"_id":"z1"}}""")),
+    "curbs.geojson" -> fc(Seq(point(8, 9, None, "c1"))))
+
+  /** Every `content_<table>/tdei_dataset_id=…` directory under a warehouse root. */
+  private def datasetPartitions(root: String): Seq[String] =
+    Option(new java.io.File(root).listFiles()).toSeq.flatten
+      .filter(t => t.isDirectory && t.getName.startsWith("content_"))
+      .flatMap(t => Option(t.listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("tdei_dataset_id="))
+        .map(p => s"${t.getName}/${p.getName}"))
+      .sorted
+
+  test("dataset ids with path-special characters: pre-clean finds Spark's escaped partitions") {
+    val engine = mkEngine()
+    val root = engine.warehouse.root
+    assert(engine.processRequest(request(writeZip(canonicalZip), id = "ds:1")).success)
+    assert(datasetPartitions(root).contains("content_zone/tdei_dataset_id=ds%3A1"))
+    assert(engine.warehouse.partitionExists("zone", "ds:1"))
+
+    // reload without the zones entry: the stale zone layer must go
+    val noZones = zipBytes(
+      "nodes.geojson" -> fc(Seq(point(1, 2, None, "n9"))),
+      "edges.geojson" -> fc(Seq(
+        """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[1.0,2.0],[3.0,4.0]]},"properties":{"_id":"e9"}}""")))
+    assert(engine.processRequest(request(writeZip(noZones), id = "ds:1")).success)
+    assert(!engine.warehouse.partitionExists("zone", "ds:1"))
+    assert(!engine.warehouse.partitionExists("extension", "ds:1"))
+    assert(engine.warehouse.table("zone").count() == 0)
+    val nodes = engine.warehouse.table("node").collect()
+    assert(nodes.length == 1 && nodes(0).getAs[String]("tdei_dataset_id") == "ds:1")
+    assert(engine.warehouse.table("stats").collect().map(_.getAs[String]("layer_table")).sorted
+      .sameElements(Seq("edge", "node")))
+  }
+
+  test("staged write: every layer lands under its table, schemas unchanged, staging emptied") {
+    val engine = mkEngine()
+    val root = engine.warehouse.root
+    assert(engine.processRequest(request(writeZip(sevenLayerZip), id = "ds7")).success)
+    assert(datasetPartitions(root) == Seq("node", "edge", "extension_point", "extension_line",
+      "extension_polygon", "zone", "extension", "dataset", "extension_file", "stats")
+      .map(t => s"content_$t/tdei_dataset_id=ds7").sorted)
+    val staging = new java.io.File(root, "_staging")
+    assert(Option(staging.listFiles()).forall(_.isEmpty), "staging leftovers")
+    // each plain table's files hold exactly (feature, requested_by)
+    Seq("node", "edge", "extension_point", "extension_line", "extension_polygon", "zone").foreach { t =>
+      val files = spark.read.parquet(engine.warehouse.partitionPath(t, "ds7"))
+      assert(files.schema.fieldNames.toSeq == Seq("feature", "requested_by"), t)
+      assert(files.count() == (if (t == "node") 2 else 1), t)
+    }
+    assert(spark.read.parquet(engine.warehouse.partitionPath("extension", "ds7"))
+      .schema.fieldNames.toSeq == Seq("ext_file_id", "feature", "requested_by"))
+    val stats = engine.warehouse.table("stats").collect().map { r =>
+      (r.getAs[String]("layer_table"), r.getAs[String]("geometry_type"),
+        r.getAs[Long]("feature_count"), r.getAs[Double]("min_lon"), r.getAs[Double]("max_lat"))
+    }.toSet
+    assert(stats == Set(("node", "Point", 2L, -1.0, 2.0), ("edge", "LineString", 1L, 1.0, 2.0),
+      ("extension_point", "Point", 1L, 5.0, 6.0), ("extension_line", "LineString", 1L, 0.5, 0.5),
+      ("extension_polygon", "Polygon", 1L, 0.0, 0.0), ("zone", "Polygon", 1L, 2.0, 2.0),
+      ("extension", "Point", 1L, 8.0, 9.0)))
+
+    // the stored-table refresh computes the same stats rows
+    def statRows = engine.warehouse.table("stats").collect().map(_.toSeq).toSet
+    val fromLoad = statRows
+    engine.updateStats("ds7")
+    assert(statRows == fromLoad)
+  }
+
+  test("a failed feature write leaves no partition, no staging, and a failure response") {
+    val engine = mkEngine()
+    val root = engine.warehouse.root
+    assert(engine.processRequest(request(writeZip(sevenLayerZip), id = "dsf")).success)
+    assert(datasetPartitions(root).nonEmpty)
+    // an unwritable staging root: a plain file where the directory goes
+    val staging = new java.io.File(root, "_staging")
+    staging.delete()
+    assert(staging.createNewFile())
+    val resp = engine.processRequest(request(writeZip(sevenLayerZip), id = "dsf"))
+    assert(!resp.success && resp.message.startsWith("Error loading the data :"))
+    assert(resp.status == 500)
+    assert(datasetPartitions(root).isEmpty, datasetPartitions(root))
+    assert(staging.isFile && staging.length == 0, "staging leftovers")
+    assert(engine.warehouse.table("response").filter("success = false").count() == 1)
+  }
+
+  test("job budget: one 7-layer load submits a fixed number of Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val tagKey = "graft.test.tag"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(tagKey)))
+          .foreach(t => jobs.put(e.jobId, t))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, true)
+    }
+    val sc = spark.sparkContext
+    val engine = mkEngine()
+    val zip = writeZip(sevenLayerZip)
+    // warm-up load, so the counted load plans like a steady-state one
+    assert(engine.processRequest(request(zip, id = "warm")).success)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tagKey, "load")
+      assert(engine.processRequest(request(zip, id = "budget")).success)
+      // a marker job after the load: listener events arrive in order, so
+      // once the marker has ended, every job of the load has been seen
+      sc.setLocalProperty(tagKey, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      def markerEnded = jobs.asScala.exists { case (id, t) => t == "marker" && ended.containsKey(id) }
+      while (!markerEnded && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(markerEnded, "listener never saw the marker job")
+    } finally {
+      sc.setLocalProperty(tagKey, null)
+      sc.removeSparkListener(listener)
+    }
+    // 1 parse aggregation (builds the cache), 1 staged write of the six
+    // plain tables, 1 extension write, 2 metadata writes, 1 stats write,
+    // 1 response append
+    assert(jobs.asScala.count(_._2 == "load") == 7, jobs)
+  }
+
+  test("multi-archive load: headers ordered by archive in resolved order, then entry") {
+    val dir = Files.createTempDirectory("graft-multi-meta")
+    Seq("a", "b").foreach { n =>
+      val z = zipBytes(
+        "nodes.geojson" -> fc(Seq(point(1, 2, None, s"$n-1")), header = Map("name" -> s"\"$n-nodes\"")),
+        "x_nodes.geojson" -> fc(Seq(point(3, 4, None, s"$n-2")), header = Map("name" -> s"\"$n-x\"")))
+      val out = new FileOutputStream(dir.resolve(s"$n.zip").toFile)
+      out.write(z); out.close()
+    }
+    val last = GeoJsonZipSource.archives(spark, dir.toString).last
+    val lastName = last.substring(last.lastIndexOf('/') + 1).stripSuffix(".zip")
+    val engine = mkEngine()
+    assert(engine.processRequest(request(dir.toString)).success)
+    val ds = engine.warehouse.table("dataset").collect()(0)
+    assert(ds.getAs[String]("node_info") == s"""{"name":"$lastName-x"}""")
+    assert(engine.warehouse.table("node").count() == 4)
   }
 }

@@ -155,4 +155,70 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
     sub.processAll(msgs)
     assert(maxSeen.get() == 2, s"max in-flight ${maxSeen.get()}")
   }
+
+  test("two concurrent loads of different datasets each keep exactly their own rows") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    def feature(kind: String, id: String, i: Int): String = kind match {
+      case "Point" =>
+        s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$i.5,1.0,2.0]},"properties":{"_id":"$id"}}"""
+      case _ =>
+        s"""{"type":"Feature","geometry":{"type":"$kind","coordinates":[[$i.0,1.0],[2.0,3.0]]},"properties":{"_id":"$id"}}"""
+    }
+    def archive(ds: String, layers: Seq[(String, String, Int)]): String = {
+      val f = Files.createTempFile(s"graft-$ds", ".zip").toFile
+      val out = new FileOutputStream(f)
+      out.write(zipBytes(layers.map { case (entry, kind, n) =>
+        entry -> (0 until n).map(i => feature(kind, s"$ds-$entry-$i", i))
+          .mkString("""{"type":"FeatureCollection","features":[""", ",", "]}")
+      }: _*))
+      out.close()
+      f.getAbsolutePath
+    }
+    val a = archive("qa", Seq(("nodes.geojson", "Point", 400), ("edges.geojson", "LineString", 300)))
+    val b = archive("qb", Seq(("nodes.geojson", "Point", 250), ("lines.geojson", "LineString", 120),
+      ("curbs.geojson", "Point", 50)))
+    val wh = Files.createTempDirectory("graft-wh-pair").toString
+    // both loads are inside the engine before either starts its work
+    val started = new CountDownLatch(2)
+    val engine = new ExtractLoadEngine(spark, wh) {
+      override def processRequest(msg: QueueMessage): LoadResponse = {
+        started.countDown()
+        started.await(30, TimeUnit.SECONDS)
+        super.processRequest(msg)
+      }
+    }
+    val sub = new QueueSubscription(spark, engine, "/unused", "/unused", maxConcurrentMessages = 2)
+    sub.processAll(Seq(
+      QueueMessage("qa", "wf", ExtractLoadRequest("osw", a, "qa", "ua")),
+      QueueMessage("qb", "wf", ExtractLoadRequest("osw", b, "qb", "ub"))))
+
+    val resp = engine.warehouse.table("response").collect()
+      .map(r => r.getAs[String]("messageId") -> r.getAs[Boolean]("success")).toMap
+    assert(resp == Map("qa" -> true, "qb" -> true))
+    def ids(table: String, ds: String): Set[String] =
+      engine.warehouse.table(table).filter(s"tdei_dataset_id = '$ds'").collect()
+        .map { r =>
+          val f = r.getAs[String]("feature")
+          val at = f.indexOf("\"_id\":\"") + 7
+          f.substring(at, f.indexOf('"', at))
+        }.toSet
+    def expected(ds: String, entry: String, n: Int) = (0 until n).map(i => s"$ds-$entry-$i").toSet
+    assert(ids("node", "qa") == expected("qa", "nodes.geojson", 400))
+    assert(ids("edge", "qa") == expected("qa", "edges.geojson", 300))
+    assert(ids("node", "qb") == expected("qb", "nodes.geojson", 250))
+    assert(ids("extension_line", "qb") == expected("qb", "lines.geojson", 120))
+    assert(ids("extension", "qb") == expected("qb", "curbs.geojson", 50))
+    assert(ids("edge", "qb").isEmpty && ids("extension_line", "qa").isEmpty &&
+      ids("extension", "qa").isEmpty)
+    val stats = engine.warehouse.table("stats").collect().map { r =>
+      (r.getAs[String]("tdei_dataset_id"), r.getAs[String]("layer_table")) ->
+        r.getAs[Long]("feature_count")
+    }.toMap
+    assert(stats == Map(("qa", "node") -> 400L, ("qa", "edge") -> 300L, ("qb", "node") -> 250L,
+      ("qb", "extension_line") -> 120L, ("qb", "extension") -> 50L))
+    val userOf = engine.warehouse.table("node").collect()
+      .map(r => r.getAs[String]("tdei_dataset_id") -> r.getAs[String]("requested_by")).toSet
+    assert(userOf == Set("qa" -> "ua", "qb" -> "ub"))
+    assert(Option(new java.io.File(wh, "_staging").listFiles()).forall(_.isEmpty))
+  }
 }
