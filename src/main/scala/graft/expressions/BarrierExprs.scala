@@ -72,14 +72,8 @@ object BarrierExprs {
         builder))
     }
 
-  def registerOnLiveSession(): Unit =
-    SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-
-  /** `c`, evaluated exactly once where it is projected. */
-  def evalOnce(c: Column): Column = {
-    registerOnLiveSession()
-    call_function("eval_once", c)
-  }
+  /** `c`, evaluated exactly once where it is projected. The caller
+    * runs [[register]] on the session of the DataFrame it projects on.
+    */
+  def evalOnce(c: Column): Column = call_function("eval_once", c)
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.{be16, be32, le16, le32, le64, tag}
+
 /** Audio payloads as opaque `binary` columns: RIFF/WAV header parse,
   * 16-bit PCM decode (mono mixdown), windowed integer energy/stats, and
   * a 64-bit energy-gradient fingerprint that feeds the SAME audited
@@ -1401,10 +1403,6 @@ object Audio {
     */
   private[graft] def parseOgg(
       b: Array[Byte]): Option[(String, Int, Int, Long)] = {
-    def le32at(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16) |
-      ((b(o + 3) & 0xFFL) << 24)
-    def le64at(o: Int): Long = le32at(o) | (le32at(o + 4) << 32)
     if (b == null || b.length < 28) return None
     var codec = ""
     var channels = 0
@@ -1416,7 +1414,7 @@ object Audio {
       if (b(pos) != 'O'.toByte || b(pos + 1) != 'g'.toByte ||
         b(pos + 2) != 'g'.toByte || b(pos + 3) != 'S'.toByte ||
         b(pos + 4) != 0) return None
-      val pageGranule = le64at(pos + 6)
+      val pageGranule = le64(b, pos + 6)
       val nSegs = b(pos + 26) & 0xFF
       if (pos + 27 + nSegs > b.length) return None
       var bodyLen = 0
@@ -1428,7 +1426,7 @@ object Audio {
       val body = pos + 27 + nSegs
       if (body + bodyLen > b.length) return None
       if (oggPageCrc(b, pos, 27 + nSegs + bodyLen) !=
-        le32at(pos + 22)) return None // page CRC must verify
+        le32(b, pos + 22)) return None // page CRC must verify
       if (first) {
         if ((b(pos + 5) & 0x02) == 0) return None // BOS flag required
         oggIdPacket(b, body, bodyLen) match {
@@ -1455,15 +1453,12 @@ object Audio {
     */
   private def oggIdPacket(b: Array[Byte], body: Int,
       bodyLen: Int): Option[(String, Int, Int)] = {
-    def le32at(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16) |
-      ((b(o + 3) & 0xFFL) << 24)
     if (bodyLen >= 16 && (b(body) & 0xFF) == 0x01 &&
       new String(b, body + 1, 6, "US-ASCII") == "vorbis")
-      Some(("vorbis", b(body + 11) & 0xFF, le32at(body + 12).toInt))
+      Some(("vorbis", b(body + 11) & 0xFF, le32(b, body + 12).toInt))
     else if (bodyLen >= 19 &&
       new String(b, body, 8, "US-ASCII") == "OpusHead")
-      Some(("opus", b(body + 9) & 0xFF, le32at(body + 12).toInt))
+      Some(("opus", b(body + 9) & 0xFF, le32(b, body + 12).toInt))
     else None
   }
 
@@ -1494,9 +1489,6 @@ object Audio {
       }
       got
     }
-    def le32(o: Int): Long = (page(o) & 0xFFL) |
-      ((page(o + 1) & 0xFFL) << 8) | ((page(o + 2) & 0xFFL) << 16) |
-      ((page(o + 3) & 0xFFL) << 24)
     var codec = ""
     var channels = 0
     var rate = 0
@@ -1521,7 +1513,7 @@ object Audio {
         }
         val body = 27 + nSegs
         if (readUpTo(body, bodyLen) < bodyLen) return None
-        if (oggPageCrc(page, 0, body + bodyLen) != le32(22))
+        if (oggPageCrc(page, 0, body + bodyLen) != le32(page, 22))
           return None // page CRC must verify
         if (first) {
           if ((page(5) & 0x02) == 0) return None // BOS flag required
@@ -1532,7 +1524,7 @@ object Audio {
           if (channels <= 0 || rate <= 0) return None
           first = false
         }
-        val pageGranule = le32(6) | (le32(10) << 32)
+        val pageGranule = le64(page, 6)
         // -1 marks a page with no completed packet; skip for duration
         if (pageGranule != -1L) granule = pageGranule
       }
@@ -1681,23 +1673,20 @@ object Audio {
   private[graft] def parseVorbisComments(b: Array[Byte], start: Int,
       end: Int, exact: Boolean)
       : Option[(String, Vector[(String, String)], Int)] = {
-    def le32at(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16) |
-      ((b(o + 3) & 0xFFL) << 24)
     if (start + 4 > end) return None
-    val vlen = le32at(start)
+    val vlen = le32(b, start)
     if (vlen < 0L || start + 4 + vlen > end) return None
     val vendor = new String(b, start + 4, vlen.toInt, "UTF-8")
     var p = start + 4 + vlen.toInt
     if (p + 4 > end) return None
-    val n = le32at(p)
+    val n = le32(b, p)
     p += 4
     if (n < 0L || n > (end - p)) return None // each comment is >= 4+1
     val out = Vector.newBuilder[(String, String)]
     var i = 0L
     while (i < n) {
       if (p + 4 > end) return None
-      val clen = le32at(p)
+      val clen = le32(b, p)
       p += 4
       if (clen < 0L || p + clen > end) return None
       val s = new String(b, p, clen.toInt, "UTF-8")
@@ -1842,14 +1831,14 @@ object Audio {
       b: Array[Byte]): Seq[(String, String)] = {
     if (b == null || b.length < 12 || tag(b, 0) != "FORM" ||
       tag(b, 8) != "AIFF") return Nil
-    val declared = 8L + beU32(b, 4)
+    val declared = 8L + be32(b, 4)
     val total = math.min(declared, b.length.toLong)
     val wanted = Set("NAME", "AUTH", "ANNO", "(c) ")
     val out = Seq.newBuilder[(String, String)]
     var pos = 12L
     while (pos + 8 <= total) {
       val ct = tag(b, pos.toInt)
-      val len = beU32(b, pos.toInt + 4)
+      val len = be32(b, pos.toInt + 4)
       if (len < 0L || pos + 8 + len > total) return Nil
       if (wanted(ct))
         out += ((ct, new String(b, pos.toInt + 8, len.toInt, "UTF-8")))
@@ -1857,10 +1846,6 @@ object Audio {
     }
     out.result()
   }
-
-  private def beU32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-      ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
 
   /** Append a `LIST`/`INFO` chunk to a built WAV (RIFF size grown in
     * place) — the encode twin of [[parseRiffInfo]].
@@ -1920,7 +1905,7 @@ object Audio {
     val out = new Array[Byte](aiff.length + chunks.length)
     System.arraycopy(aiff, 0, out, 0, aiff.length)
     System.arraycopy(chunks, 0, out, aiff.length, chunks.length)
-    val newSz = beU32(aiff, 4) + chunks.length
+    val newSz = be32(aiff, 4) + chunks.length
     out(4) = ((newSz >> 24) & 0xFF).toByte
     out(5) = ((newSz >> 16) & 0xFF).toByte
     out(6) = ((newSz >> 8) & 0xFF).toByte
@@ -2120,16 +2105,6 @@ object Audio {
       dataOffset: Long, dataLen: Long, blockAlign: Int = 0,
       samplesPerBlock: Int = 0)
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-
-  private def tag(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-
   /** AIFF (IFF `FORM`/`AIFF`): big-endian chunks, `COMM` (channels,
     * frame count, sample size, the 80-bit extended-float sample
     * rate) and `SSND` (offset/blockSize then data). The rate must be
@@ -2142,12 +2117,8 @@ object Audio {
       trueLen: Long = -1L): Option[Parsed] = {
     if (bytes == null || bytes.length < 12) return None
     val effLen = if (trueLen < 0) bytes.length.toLong else trueLen
-    def be16(o: Int): Int = ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-    def be32(o: Int): Long =
-      ((bytes(o) & 0xFFL) << 24) | ((bytes(o + 1) & 0xFFL) << 16) |
-        ((bytes(o + 2) & 0xFFL) << 8) | (bytes(o + 3) & 0xFFL)
     if (tag(bytes, 0) != "FORM" || tag(bytes, 8) != "AIFF") return None
-    val total = math.min(8L + be32(4), effLen)
+    val total = math.min(8L + be32(bytes, 4), effLen)
     var channels = 0; var nFrames = -1L; var bits = 0; var rate = -1L
     var dataOffset = -1L; var dataLen = -1L
     var pos = 12L
@@ -2155,18 +2126,18 @@ object Audio {
       // a chunk header past the buffered prefix refuses honestly
       if (pos + 8 > bytes.length) return None
       val ct = tag(bytes, pos.toInt)
-      val sz = be32((pos + 4).toInt)
+      val sz = be32(bytes, (pos + 4).toInt)
       val body = pos + 8
       if (body + sz > total) return None
       if (ct == "COMM") {
         if (sz < 18 || body + 18 > bytes.length) return None
-        channels = be16(body.toInt)
-        nFrames = be32((body + 2).toInt)
-        bits = be16((body + 6).toInt)
+        channels = be16(bytes, body.toInt)
+        nFrames = be32(bytes, (body + 2).toInt)
+        bits = be16(bytes, (body + 6).toInt)
         rate = extended80(bytes, (body + 8).toInt).getOrElse(return None)
       } else if (ct == "SSND") {
         if (sz < 8 || body + 8 > bytes.length) return None
-        val off = be32(body.toInt)
+        val off = be32(bytes, body.toInt)
         // blockSize (body+4) is advisory; data begins after offset
         dataOffset = body + 8 + off
         dataLen = sz - 8 - off

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.{be16, be32, be64, tag}
+
 /** AVIF/HEIF still images — the ISO-BMFF image family (ISO/IEC
   * 23008-12 over the 14496-12 box grammar) that modern crawls
   * increasingly carry. Dimensions do NOT live in a track: they are
@@ -72,20 +74,9 @@ object Avif {
     */
   private[graft] def isImageBrand(b: Array[Byte]): Boolean =
     b != null && b.length >= 12 &&
-      new String(b, 4, 4, "US-ASCII") == "ftyp" &&
-      imageBrands.contains(new String(b, 8, 4, "US-ASCII"))
+      tag(b, 4) == "ftyp" && imageBrands.contains(tag(b, 8))
 
   // ---- imperative internals -------------------------------------------
-
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-      ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-  private def fourcc(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, "US-ASCII")
 
   /** Child box ranges of [start, end): (type, payloadStart,
     * payloadEnd). None on any malformed header — every STRUCTURAL
@@ -99,7 +90,7 @@ object Avif {
     while (pos < end) {
       if (pos + 8 > avail) return None
       val sz32 = be32(b, pos.toInt)
-      val typ = fourcc(b, pos.toInt + 4)
+      val typ = tag(b, pos.toInt + 4)
       val (payload, boxEnd) =
         if (sz32 == 1L) {
           if (pos + 16 > avail) return None
@@ -131,7 +122,7 @@ object Avif {
     val avail = bytes.length.toLong
     val limit = if (trueLen < 0L) avail else trueLen
     if (trueLen >= 0L && trueLen < avail) return None // lying prefix
-    val brand = fourcc(bytes, 8)
+    val brand = tag(bytes, 8)
     val top = childRanges(bytes, 0L, limit, avail).getOrElse(return None)
     if (top.head._1 != "ftyp") return None
     val meta = top.find(_._1 == "meta").getOrElse(return None)
@@ -329,7 +320,7 @@ object Avif {
       if (q + 6 > e0) return None
       // protection index (2) + item_type (4cc)
       if (types.contains(itemId)) return None // duplicate id
-      types(itemId) = fourcc(bytes, q.toInt + 2)
+      types(itemId) = tag(bytes, q.toInt + 2)
     }
     // iloc: item id -> concatenated extents
     val iloc = mc.find(_._1 == "iloc").getOrElse(return None)

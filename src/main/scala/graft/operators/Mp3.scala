@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.{be32, tag}
+
 /** MP3 (MPEG-1/2/2.5 Layer III) frame-header metadata — pure integer
   * closed form from the published frame grammar: 11-bit sync word,
   * version/layer bits, the bitrate and sample-rate index tables,
@@ -116,14 +118,11 @@ object Mp3 {
     def syncsafe(o: Int): Int =
       ((bytes(o) & 0x7F) << 21) | ((bytes(o + 1) & 0x7F) << 14) |
         ((bytes(o + 2) & 0x7F) << 7) | (bytes(o + 3) & 0x7F)
-    def be32(o: Int): Int =
-      ((bytes(o) & 0xFF) << 24) | ((bytes(o + 1) & 0xFF) << 16) |
-        ((bytes(o + 2) & 0xFF) << 8) | (bytes(o + 3) & 0xFF)
     val tagEnd = math.min(bytes.length, 10 + syncsafe(6))
     var pos = 10
     if ((flags & 0x40) != 0) { // extended header: skip by its size
       if (pos + 4 > tagEnd) return Nil
-      val ehSize = if (major == 4) syncsafe(pos) else be32(pos)
+      val ehSize = if (major == 4) syncsafe(pos) else be32(bytes, pos).toInt
       // Long arithmetic: a hostile be32 near 2^31 must not wrap the
       // cursor negative and slip past the bounds check
       val skip = if (major == 4) ehSize.toLong else 4L + ehSize
@@ -133,7 +132,7 @@ object Mp3 {
     val out = Seq.newBuilder[(String, String)]
     while (pos + 10 <= tagEnd && bytes(pos) != 0) {
       val frameId = new String(bytes, pos, 4, "US-ASCII")
-      val fSize = if (major == 4) syncsafe(pos + 4) else be32(pos + 4)
+      val fSize = if (major == 4) syncsafe(pos + 4) else be32(bytes, pos + 4).toInt
       // Long bound: fSize near 2^31 would wrap `pos + 10 + fSize`
       // negative in Int and bypass the check
       if (fSize < 0 || 10L + fSize > tagEnd.toLong - pos)
@@ -306,16 +305,11 @@ object Mp3 {
           else { if (ch == 1) 9 else 17 }
         val x = pos + 4 + side
         if (x + 8 <= bytes.length && x + 8 <= pos + fb) {
-          val tag = new String(bytes, x, 4, "US-ASCII")
-          if (tag == "Xing" || tag == "Info") {
-            val flags = ((bytes(x + 4) & 0xFF) << 24) |
-              ((bytes(x + 5) & 0xFF) << 16) |
-              ((bytes(x + 6) & 0xFF) << 8) | (bytes(x + 7) & 0xFF)
-            if ((flags & 1) != 0 && x + 12 <= bytes.length &&
+          val xing = tag(bytes, x)
+          if (xing == "Xing" || xing == "Info") {
+            if ((be32(bytes, x + 4) & 1) != 0 && x + 12 <= bytes.length &&
               x + 12 <= pos + fb)
-              xingFrames = ((bytes(x + 8) & 0xFFL) << 24) |
-                ((bytes(x + 9) & 0xFFL) << 16) |
-                ((bytes(x + 10) & 0xFFL) << 8) | (bytes(x + 11) & 0xFFL)
+              xingFrames = be32(bytes, x + 8)
           }
         }
       } else {
@@ -421,16 +415,10 @@ object Mp3 {
             else { if (ch == 1) 9 else 17 }
           val x = 4 + side
           if (x + 8 <= fb) {
-            val tag = new String(frame0, x, 4, "US-ASCII")
-            if (tag == "Xing" || tag == "Info") {
-              val flags = ((frame0(x + 4) & 0xFF) << 24) |
-                ((frame0(x + 5) & 0xFF) << 16) |
-                ((frame0(x + 6) & 0xFF) << 8) | (frame0(x + 7) & 0xFF)
-              if ((flags & 1) != 0 && x + 12 <= fb)
-                xingFrames = ((frame0(x + 8) & 0xFFL) << 24) |
-                  ((frame0(x + 9) & 0xFFL) << 16) |
-                  ((frame0(x + 10) & 0xFFL) << 8) |
-                  (frame0(x + 11) & 0xFFL)
+            val xing = tag(frame0, x)
+            if (xing == "Xing" || xing == "Info") {
+              if ((be32(frame0, x + 4) & 1) != 0 && x + 12 <= fb)
+                xingFrames = be32(frame0, x + 8)
             }
           }
         } else {

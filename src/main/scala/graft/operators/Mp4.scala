@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.{be16, be32, be64, tag}
+import graft.io.RandomAccess
+
 /** MP4 / ISO-BMFF (ISO/IEC 14496-12) container metadata — the
   * real-world video container: virtually every video a large corpus
   * ingests is MP4, so the metadata-filter path (duration, dimensions,
@@ -151,17 +154,6 @@ object Mp4 {
         0, parsed = false)
     }
 
-  private def be16(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-      ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-  private def be64(b: Array[Byte], o: Int): Long =
-    (be32(b, o) << 32) | be32(b, o + 4)
-  private def fourcc(b: Array[Byte], o: Int): String =
-    // ISO-8859-1: byte-preserving (iTunes ilst names carry 0xA9 '©')
-    new String(b, o, 4, "ISO-8859-1")
-
   /** One box header at `pos`: (payloadStart, boxEnd) — None when the
     * header itself (including a 64-bit largesize) doesn't fit the
     * available bytes, or the declared size is malformed (smaller than
@@ -175,7 +167,7 @@ object Mp4 {
       avail: Long): Option[(String, Long, Long)] = {
     if (pos + 8 > limit || pos + 8 > avail) return None
     val sz32 = be32(b, pos.toInt)
-    val typ = fourcc(b, pos.toInt + 4)
+    val typ = tag(b, pos.toInt + 4)
     if (sz32 == 1L) { // 64-bit largesize follows the type
       if (pos + 16 > limit || pos + 16 > avail) return None
       val sz = be64(b, pos.toInt + 8)
@@ -239,7 +231,7 @@ object Mp4 {
       boxAt(bytes, 0L, total, avail).getOrElse(return None)
     if (t0 != "ftyp" || ftypBody + 8 > avail || ftypEnd > total)
       return None
-    val majorBrand = fourcc(bytes, ftypBody.toInt)
+    val majorBrand = tag(bytes, ftypBody.toInt)
 
     val acc = new MoovAcc
     var sawMoov = false
@@ -314,7 +306,7 @@ object Mp4 {
             val e = body + 8
             if (e + 16 > avail || e + 16 > boxEnd) false
             else {
-              val fmt = fourcc(bytes, e.toInt + 4)
+              val fmt = tag(bytes, e.toInt + 4)
               if (handler == "vide") {
                 // VisualSampleEntry: pre_defined(2) reserved(2)
                 // pre_defined(12) → width u16 @+32, height u16 @+34
@@ -365,7 +357,7 @@ object Mp4 {
               case "hdlr" =>
                 // FullBox(4) + pre_defined(4) + handler_type(4CC)
                 if (b2 + 12 > avail || b2 + 12 > e2) false
-                else { handler = fourcc(bytes, b2.toInt + 8); true }
+                else { handler = tag(bytes, b2.toInt + 8); true }
               case _ => true
             })
           case _ => true
@@ -417,20 +409,11 @@ object Mp4 {
 
   // ---- the path-level seek walk (Mp4ShardSource's engine) -----------
 
-  /** Random-access reader abstraction for [[parseMp4Seek]] — the
-    * [[Zip.ZipReader]] pattern. ISO-BMFF is an INDEXED grammar: the
-    * `moov` metadata tree commonly TRAILS a multi-GiB `mdat` (the
-    * non-faststart archival layout), so unlike MPEG-TS/tar the honest
-    * streamed form of an on-disk `.mp4` is neither a forward walk nor
-    * a prefix read — it is a SEEKING walk over top-level box headers
-    * that fetches only the `moov` subtree, wherever it sits.
-    */
-  private[graft] trait Mp4Reader {
-    def length: Long
-    def readFully(at: Long, buf: Array[Byte], off: Int, n: Int): Unit
-  }
-
-  /** [[parseMp4]]'s seek twin: the same top-level grammar (leading
+  /** [[parseMp4]]'s seek twin over a [[RandomAccess]] (the open file
+    * in `sources.Mp4ShardSource` and the media census). ISO-BMFF is an
+    * INDEXED grammar: the `moov` metadata tree commonly TRAILS a
+    * multi-GiB `mdat`, so the honest streamed form of an on-disk
+    * `.mp4` is a SEEKING walk: the same top-level grammar (leading
     * `ftyp`, declared-size box hopping, a trailing box may declare
     * past EOF) reading 8/16-byte box headers at their file offsets,
     * and the SAME [[walkMoovBuf]] state machine over the `moov` body
@@ -442,7 +425,7 @@ object Mp4 {
     * than buffering unbounded — the [[Zip.walkZip]] `maxCdBytes`
     * principle).
     */
-  private[graft] def parseMp4Seek(r: Mp4Reader,
+  private[graft] def parseMp4Seek(r: RandomAccess,
       maxMoovBytes: Int = 1 << 28): Option[ParsedMp4] = {
     val len = r.length
     if (len < 16L) return None
@@ -452,7 +435,7 @@ object Mp4 {
       if (pos + 8 > len) return None
       r.readFully(pos, hdr, 0, 8)
       val sz32 = be32(hdr, 0)
-      val typ = fourcc(hdr, 4)
+      val typ = tag(hdr, 4)
       if (sz32 == 1L) { // 64-bit largesize follows the type
         if (pos + 16 > len) return None
         r.readFully(pos + 8, hdr, 8, 8)
@@ -468,7 +451,7 @@ object Mp4 {
     if (t0 != "ftyp" || ftypBody + 8 > len || ftypEnd > len)
       return None
     r.readFully(ftypBody, hdr, 0, 4)
-    val majorBrand = fourcc(hdr, 0)
+    val majorBrand = tag(hdr, 0)
     val acc = new MoovAcc
     var sawMoov = false
     var pos = ftypEnd
@@ -561,7 +544,7 @@ object Mp4 {
         (_, mb, me) <- kids.find(_._1 == "mdia")
         mKids <- childRanges(bytes, mb, me)
         (_, hb, he) <- mKids.find(_._1 == "hdlr")
-        if hb + 12 <= he && fourcc(bytes, hb.toInt + 8) == "soun"
+        if hb + 12 <= he && tag(bytes, hb.toInt + 8) == "soun"
         (_, nb, ne) <- mKids.find(_._1 == "minf")
         nKids <- childRanges(bytes, nb, ne)
         (_, sb, se) <- nKids.find(_._1 == "stbl")
@@ -581,7 +564,7 @@ object Mp4 {
     val e = sdB + 4 // first sample entry: size(4) format(4) ...
     if (e + 36 > sdE) return None
     val ei = e.toInt
-    val fmt = fourcc(bytes, ei + 4)
+    val fmt = tag(bytes, ei + 4)
     var channels = 0
     var rate = 0
     var bits = 0
@@ -1159,7 +1142,7 @@ object Mp4 {
           .getOrElse(return Left("malformed mdia"))
         val isVide = mc.exists { case (t, b, e) =>
           t == "hdlr" && b + 12 <= avail && b + 12 <= e &&
-            fourcc(bytes, b.toInt + 8) == "vide"
+            tag(bytes, b.toInt + 8) == "vide"
         }
         if (isVide) mc.filter(_._1 == "minf").foreach { minf =>
           children(minf._2, minf._3).toVector.flatten
@@ -1172,7 +1155,7 @@ object Mp4 {
                   val entryEnd = e + be32(bytes, e.toInt)
                   if (entryEnd > stsd._3 || entryEnd > avail)
                     return Left("truncated sample entry")
-                  val fmt = fourcc(bytes, e.toInt + 4)
+                  val fmt = tag(bytes, e.toInt + 4)
                   if (fmts.contains(fmt)) {
                     if (e + 86 > entryEnd)
                       return Left("short visual entry")
@@ -1770,7 +1753,7 @@ object Mp4 {
         mKids <- childRanges(bytes, mb, me)
         (_, hb, he) <- mKids.find(_._1 == "hdlr")
         if hb + 12 <= he && {
-          val h = fourcc(bytes, hb.toInt + 8)
+          val h = tag(bytes, hb.toInt + 8)
           h == "text" || h == "sbtl"
         }
         (_, dB, dE) <- mKids.find(_._1 == "mdhd")
@@ -1799,7 +1782,7 @@ object Mp4 {
     val (sdB, sdE) = full("stsd").getOrElse(return None)
     if (sdB + 4 > sdE || be32(bytes, sdB.toInt) < 1L) return None
     if (sdB + 12 > sdE) return None
-    if (fourcc(bytes, sdB.toInt + 8) != "tx3g") return None
+    if (tag(bytes, sdB.toInt + 8) != "tx3g") return None
 
     // stsz sizes
     val (szB, szE) = full("stsz").getOrElse(return None)
@@ -2118,7 +2101,7 @@ object Mp4 {
     while (moovAt < 0 && pos + 8 <= mp4.length) {
       val sz = be32(mp4, pos)
       require(sz >= 8L, "largesize/to-end boxes before moov unsupported")
-      val typ = fourcc(mp4, pos + 4)
+      val typ = tag(mp4, pos + 4)
       if (typ == "moov") { moovAt = pos; moovEnd = pos + sz.toInt }
       else pos += sz.toInt
     }

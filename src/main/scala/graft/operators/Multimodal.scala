@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+
+import graft.io.Bytes.{be32, le16, le32, u16, u32}
 import org.apache.spark.sql.types._
 
 /** Multimodal-column operators for training-data pipelines: image /
@@ -146,15 +148,11 @@ object Multimodal {
     */
   private[graft] def webpInfo(
       b: Array[Byte]): Option[(String, Long, Long, Boolean, Boolean)] = {
-    def le24(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16)
-    def le16(o: Int): Int = (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
     if (b == null || b.length < 20) return None
     if (new String(b, 0, 4, "US-ASCII") != "RIFF" ||
       new String(b, 8, 4, "US-ASCII") != "WEBP") return None
     val fourcc = new String(b, 12, 4, "US-ASCII")
-    val sz = (b(16) & 0xFFL) | ((b(17) & 0xFFL) << 8) |
-      ((b(18) & 0xFFL) << 16) | ((b(19) & 0xFFL) << 24)
+    val sz = le32(b, 16)
     val d = 20 // chunk data offset
     fourcc match {
       case "VP8 " =>
@@ -164,8 +162,8 @@ object Multimodal {
         else if ((b(d + 3) & 0xFF) != 0x9D || (b(d + 4) & 0xFF) != 0x01 ||
           (b(d + 5) & 0xFF) != 0x2A) None
         else {
-          val w = le16(d + 6) & 0x3FFF
-          val h = le16(d + 8) & 0x3FFF
+          val w = le16(b, d + 6) & 0x3FFF
+          val h = le16(b, d + 8) & 0x3FFF
           if (w == 0 || h == 0) None
           else Some(("VP8 ", w.toLong, h.toLong, false, false))
         }
@@ -190,7 +188,9 @@ object Multimodal {
         if (sz < 10 || b.length < d + 10) None
         else {
           val flags = b(d) & 0xFF
-          Some(("VP8X", 1L + le24(d + 4), 1L + le24(d + 7),
+          // a 24-bit LE field at o is the top 3 bytes of le32 at o − 1
+          Some(("VP8X", 1L + (le32(b, d + 3) >>> 8),
+            1L + (le32(b, d + 6) >>> 8),
             (flags & 0x10) != 0, (flags & 0x02) != 0))
         }
       case _ => None
@@ -219,32 +219,24 @@ object Multimodal {
       if (b(0) == 'I'.toByte && b(1) == 'I'.toByte) true
       else if (b(0) == 'M'.toByte && b(1) == 'M'.toByte) false
       else return None
-    def u16(o: Int): Int =
-      if (little) (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-      else ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
-    def u32(o: Int): Long =
-      if (little) (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-        ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-      else ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-        ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
+    if (u16(b, 2, little) != 42) return None
+    val ifd = u32(b, 4, little)
     if (ifd < 8 || ifd + 2 > b.length) return None
-    val n = u16(ifd.toInt)
+    val n = u16(b, ifd.toInt, little)
     if (ifd + 2 + 12L * n > b.length) return None
     var w = -1L
     var h = -1L
     var i = 0
     while (i < n) {
       val e = (ifd + 2 + 12 * i).toInt
-      val tag = u16(e)
-      val typ = u16(e + 2)
+      val tag = u16(b, e, little)
+      val typ = u16(b, e + 2, little)
       // inline value: SHORT (3) reads 2 bytes, LONG (4) reads 4 —
       // both fit the 4-byte value slot when count == 1
-      if ((tag == 256 || tag == 257) && u32(e + 4) == 1L) {
+      if ((tag == 256 || tag == 257) && u32(b, e + 4, little) == 1L) {
         val v =
-          if (typ == 3) u16(e + 8).toLong
-          else if (typ == 4) u32(e + 8)
+          if (typ == 3) u16(b, e + 8, little).toLong
+          else if (typ == 4) u32(b, e + 8, little)
           else -1L
         if (v >= 0) { if (tag == 256) w = v else h = v }
       }
@@ -373,13 +365,10 @@ object Multimodal {
       b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
       b(8) != 'W' || b(9) != 'E' || b(10) != 'B' || b(11) != 'P')
       return None
-    def le32(o: Int): Long =
-      (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-        ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-    val riffEnd = math.min(8L + le32(4), b.length.toLong)
+    val riffEnd = math.min(8L + le32(b, 4), b.length.toLong)
     var pos = 12L
     while (pos + 8 <= riffEnd) {
-      val size = le32((pos + 4).toInt)
+      val size = le32(b, (pos + 4).toInt)
       val dataOff = pos + 8
       if (dataOff + size > riffEnd) return None
       if (b(pos.toInt) == 'E' && b((pos + 1).toInt) == 'X' &&
@@ -610,15 +599,7 @@ object Multimodal {
       if (b(t0) == 'I'.toByte && b(t0 + 1) == 'I'.toByte) true
       else if (b(t0) == 'M'.toByte && b(t0 + 1) == 'M'.toByte) false
       else return None
-    def u16(o: Int): Int =
-      if (little) (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-      else ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
-    def u32(o: Int): Long =
-      if (little) (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-        ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-      else ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-        ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-    if (u16(t0 + 2) != 42) return None
+    if (u16(b, t0 + 2, little) != 42) return None
 
     var orientation = 0
     var make = ""
@@ -634,14 +615,14 @@ object Multimodal {
     def walkIfd(ifdOff: Long, sub: Boolean): Boolean = {
       if (ifdOff < 8L || t0 + ifdOff + 2 > tEnd) return false
       val base = (t0 + ifdOff).toInt
-      val n = u16(base)
+      val n = u16(b, base, little)
       if (t0 + ifdOff + 2 + 12L * n + 4 > tEnd) return false
       var i = 0
       while (i < n) {
         val e = base + 2 + 12 * i
-        val tag = u16(e)
-        val typ = u16(e + 2)
-        val count = u32(e + 4)
+        val tag = u16(b, e, little)
+        val typ = u16(b, e + 2, little)
+        val count = u32(b, e + 4, little)
         val tSize = typ match {
           case 1 | 2 | 6 | 7 => 1L // BYTE/ASCII/SBYTE/UNDEFINED
           case 3 | 8 => 2L // SHORT/SSHORT
@@ -655,8 +636,8 @@ object Multimodal {
           // is relative to the TIFF origin and must stay in-segment
           val vOff =
             if (byteLen <= 4L) e + 8L
-            else t0 + u32(e + 8)
-          if (byteLen > 4L && (u32(e + 8) < 8L ||
+            else t0 + u32(b, e + 8, little)
+          if (byteLen > 4L && (u32(b, e + 8, little) < 8L ||
             vOff + byteLen > tEnd)) return false
           def ascii(): String = {
             var len = byteLen.toInt
@@ -665,10 +646,10 @@ object Multimodal {
             new String(b, o, len, "US-ASCII")
           }
           def short0(): Int =
-            if (typ == 3 && count >= 1L) u16(vOff.toInt) else -1
+            if (typ == 3 && count >= 1L) u16(b, vOff.toInt, little) else -1
           def uint0(): Long =
-            if (typ == 3 && count >= 1L) u16(vOff.toInt).toLong
-            else if (typ == 4 && count >= 1L) u32(vOff.toInt)
+            if (typ == 3 && count >= 1L) u16(b, vOff.toInt, little).toLong
+            else if (typ == 4 && count >= 1L) u32(b, vOff.toInt, little)
             else -1L
           if (!sub) tag match {
             case 0x010F if typ == 2 => make = ascii()
@@ -676,7 +657,7 @@ object Multimodal {
             case 0x0112 => val v = short0(); if (v >= 0) orientation = v
             case 0x0132 if typ == 2 => dateTime = ascii()
             case 0x8769 if typ == 4 && count == 1L =>
-              exifIfd = u32(e + 8)
+              exifIfd = u32(b, e + 8, little)
             case _ =>
           } else tag match {
             case 0x9003 if typ == 2 => dateTimeOriginal = ascii()
@@ -691,7 +672,7 @@ object Multimodal {
       true
     }
 
-    if (!walkIfd(u32(t0 + 4), sub = false)) return None
+    if (!walkIfd(u32(b, t0 + 4, little), sub = false)) return None
     if (exifIfd >= 0L && !walkIfd(exifIfd, sub = true)) return None
     Some(ExifMeta(0L, little, orientation, make, model, dateTime,
       dateTimeOriginal, iso, exifW, exifH, parsed = true))
@@ -1225,15 +1206,11 @@ object Multimodal {
 
   /** Driver-free header parse used by the stub (PNG/GIF/JPEG). */
   private def headerDims(bytes: Array[Byte]): Option[(Long, Long)] = {
-    def be32(o: Int) =
-      ((bytes(o) & 0xFFL) << 24) | ((bytes(o + 1) & 0xFFL) << 16) |
-        ((bytes(o + 2) & 0xFFL) << 8) | (bytes(o + 3) & 0xFFL)
-    def le16(o: Int) = ((bytes(o + 1) & 0xFFL) << 8) | (bytes(o) & 0xFFL)
     if (bytes == null || bytes.length < 10) None
     else if ((bytes(0) & 0xFF) == 0x89 && bytes(1) == 'P' && bytes.length >= 24)
-      Some((be32(16), be32(20)))
+      Some((be32(bytes, 16), be32(bytes, 20)))
     else if (bytes(0) == 'G' && bytes(1) == 'I' && bytes(2) == 'F')
-      Some((le16(6), le16(8)))
+      Some((le16(bytes, 6).toLong, le16(bytes, 8).toLong))
     else jpegDims(bytes).map(d => (d._1, d._2))
   }
 
@@ -1325,17 +1302,13 @@ object Multimodal {
     */
   private def canonicalBmpRaw(bytes: Array[Byte]):
       Option[(Int, Int, Int)] = {
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | ((bytes(o + 1) & 0xFFL) << 8) |
-        ((bytes(o + 2) & 0xFFL) << 16) | ((bytes(o + 3) & 0xFFL) << 24)
-    def le16(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
     if (bytes == null || bytes.length < 54 ||
       bytes(0) != 'B'.toByte || bytes(1) != 'M'.toByte ||
-      le32(10) != 54L || le32(14) != 40L ||
-      le16(26) != 1 || le16(28) != 24 || le32(30) != 0L) return None
-    val w = le32(18)
-    val h = le32(22) // positive = bottom-up, the only shape we write
+      le32(bytes, 10) != 54L || le32(bytes, 14) != 40L ||
+      le16(bytes, 26) != 1 || le16(bytes, 28) != 24 ||
+      le32(bytes, 30) != 0L) return None
+    val w = le32(bytes, 18)
+    val h = le32(bytes, 22) // positive = bottom-up, the only shape we write
     if (w <= 0 || w > (1 << 20) || h <= 0 || h > (1 << 20)) return None
     val stride = ((3L * w + 3L) / 4L) * 4L
     if (54L + stride * h > bytes.length) return None

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.be32
+
 /** PNG as COMPRESSED image whose pixels are bit-exact: PNG's
   * DEFLATE + per-row filtering is lossless, so a decode returns
   * exactly the encoder's samples — the image rung of the
@@ -212,10 +214,6 @@ object Png {
       idatBytes: Long, idat: Vector[(Int, Int)], plteOff: Int,
       plteLen: Int, texts: Vector[TextRec], exifOff: Int,
       exifLen: Int, bytes: Array[Byte])
-
-  private def be32(b: Array[Byte], o: Int): Long =
-    ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-      ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
 
   /** Structural walk: signature, then the chunk stream — every
     * chunk's CRC-32 verified (over type + data, the published
@@ -708,7 +706,6 @@ object Png {
       }
       true
     }
-    def be32i(o: Int): Long = be32(bytes, o)
     while (!sawIend) {
       if (pos + 12 > bytes.length) return None
       val len = be32(bytes, pos.toInt)
@@ -724,8 +721,8 @@ object Png {
       ctype match {
         case "IHDR" =>
           if (sawIhdr || chunks != 1L || len != 13L) return None
-          width = be32i(dataOff).toInt
-          height = be32i(dataOff + 4).toInt
+          width = be32(bytes, dataOff).toInt
+          height = be32(bytes, dataOff + 4).toInt
           if (width <= 0 || height <= 0) return None
           bitDepth = bytes(dataOff + 8) & 0xFF
           colorType = bytes(dataOff + 9) & 0xFF
@@ -743,16 +740,16 @@ object Png {
         case "acTL" =>
           if (!sawIhdr || sawIdat || numFrames >= 0L || len != 8L)
             return None
-          numFrames = be32i(dataOff)
+          numFrames = be32(bytes, dataOff)
           if (numFrames <= 0L) return None
         case "fcTL" =>
           if (!sawIhdr || len != 26L) return None
-          if (be32i(dataOff) != nextSeq) return None // sequence
+          if (be32(bytes, dataOff) != nextSeq) return None // sequence
           nextSeq += 1
           if (!closeFrame()) return None
           cur = ApngFrame(
-            be32i(dataOff + 4).toInt, be32i(dataOff + 8).toInt,
-            be32i(dataOff + 12).toInt, be32i(dataOff + 16).toInt,
+            be32(bytes, dataOff + 4).toInt, be32(bytes, dataOff + 8).toInt,
+            be32(bytes, dataOff + 12).toInt, be32(bytes, dataOff + 16).toInt,
             ((bytes(dataOff + 20) & 0xFF) << 8) |
               (bytes(dataOff + 21) & 0xFF),
             ((bytes(dataOff + 22) & 0xFF) << 8) |
@@ -771,7 +768,7 @@ object Png {
           }
         case "fdAT" =>
           if (cur == null || len < 4L || !sawIdat) return None
-          if (be32i(dataOff) != nextSeq) return None
+          if (be32(bytes, dataOff) != nextSeq) return None
           nextSeq += 1
           curChunks :+= ((dataOff + 4, len.toInt - 4))
         case "IEND" =>

@@ -123,10 +123,16 @@ object ProductQuantization {
     * null code ARRAY; a null element nulls its own subspace's code
     * (the kernel's null-cluster convention). [[adcTopK]] and
     * [[ivfpqTopK]] filter both shapes out of scoring.
+    *
+    * The codes column is projected under an `eval_once` barrier
+    * ([[graft.expressions.EvalOnceExpr]]), which stops ALL predicate
+    * pushdown below that projection — filters on unrelated columns
+    * included. Pre-filter the input before calling this, not after.
     */
   def encode(vectors: DataFrame, idCol: String, vecCol: String,
       cb: Codebook): DataFrame = {
     graft.expressions.VectorHashExprs.register(vectors.sparkSession)
+    graft.expressions.BarrierExprs.register(vectors.sparkSession)
     vectors.select(col(idCol).as("id"),
       codesCol(transform(col(vecCol), x => x.cast("double")), cb)
         .as("codes"))
@@ -206,6 +212,11 @@ object ProductQuantization {
     * assignment (an encoded corpus can be re-sharded without
     * re-encoding). Same output contract and determinism as
     * [[adcTopK]].
+    *
+    * The corpus's cid and codes are projected under an `eval_once`
+    * barrier ([[graft.expressions.EvalOnceExpr]]), which stops ALL
+    * predicate pushdown below that projection — filters on unrelated
+    * corpus columns included. Pre-filter the corpus before calling.
     */
   def ivfpqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, cb: Codebook, numCoarse: Int = 16,
@@ -217,6 +228,7 @@ object ProductQuantization {
     TopK.requireIntegral(queries, idCol, "ivfpqTopK")
     val (m, _, sd) = checkCodebook(cb)
     graft.expressions.VectorHashExprs.register(corpus.sparkSession)
+    graft.expressions.BarrierExprs.register(corpus.sparkSession)
     val cents = if (coarse != null) coarse
       else Similarity.kmeansCentroids(corpus, idCol, vecCol, numCoarse)
     // ONE narrow projection computes the coarse cid AND the m codes —

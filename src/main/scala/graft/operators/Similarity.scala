@@ -584,10 +584,16 @@ object Similarity {
     * way. Ids must be UNIQUE — the contract of every id-keyed operator
     * here; duplicate ids collapse to one (deterministically chosen)
     * vector.
+    *
+    * The distance column is projected under an `eval_once` barrier
+    * ([[graft.expressions.EvalOnceExpr]]), which stops ALL predicate
+    * pushdown below that projection — filters on unrelated doc columns
+    * included. Pre-filter `docs` before calling.
     */
   def assignCentroidsJoin(docs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, keepVec: Boolean = false): DataFrame = {
     graft.expressions.VectorHashExprs.register(docs.sparkSession)
+    graft.expressions.BarrierExprs.register(docs.sparkSession)
     // an empty centroid set would silently assign nothing and a
     // downstream dedup would "succeed" having deduplicated nothing —
     // the kernel path throws on construction; match it
@@ -628,11 +634,17 @@ object Similarity {
     * bit-replicable by an external engine (the q_knn_ivf_int oracle
     * twin); use [[kmeansCentroidsDistributed]] for corpus-scale
     * centroid fitting.
+    *
+    * The corpus cid is projected under an `eval_once` barrier
+    * ([[graft.expressions.EvalOnceExpr]]), which stops ALL predicate
+    * pushdown below that projection — filters on unrelated corpus
+    * columns included. Pre-filter the corpus before calling.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, numCentroids: Int = 16, nprobe: Int = 4,
       centroids: Array[(Int, Array[Double])] = null): DataFrame = {
     graft.expressions.VectorHashExprs.register(corpus.sparkSession)
+    graft.expressions.BarrierExprs.register(corpus.sparkSession)
     val cents = if (centroids != null) centroids
       else kmeansCentroids(corpus, idCol, vecCol, numCentroids)
 

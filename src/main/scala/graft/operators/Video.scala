@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.{le16, le32, tag}
+
 /** Video payloads as opaque `binary` columns — the third modality of
   * the multimodal family, built to the exact contract of [[Audio]]
   * and [[Multimodal]]: a REAL RIFF/AVI container walk (header-only,
@@ -1358,14 +1360,6 @@ object Video {
       audioStream: Int = -1, audFormat: Int = 0, audChannels: Int = 0,
       audRate: Int = 0, audByteRate: Long = 0L, audBlockAlign: Int = 0,
       audBits: Int = 0)
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-  private def tag(b: Array[Byte], o: Int): String =
-    new String(b, o, 4, "US-ASCII")
 
   private def toMeta(id: Long, p: Option[ParsedAvi]): AviMeta = p match {
     case Some(m) => AviMeta(id, m.microsPerFrame, m.totalFrames,

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.io.Bytes.{le16, le32, le64}
+import graft.io.RandomAccess
+
 /** ZIP shards as a COLUMN operator — the other way image/document
   * corpora ship (the [[Tar]] counterpart; the path-level streaming
   * form lives in `sources.GeoJsonZipSource`). The walk derives
@@ -67,48 +70,19 @@ object Zip {
 
   // ---- imperative internals -------------------------------------------
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | (le32(b, o + 4) << 32)
-
-  /** Random-access view of one archive — the column operator wraps a
-    * byte array, the path-level source (`sources.ZipShardSource`)
-    * wraps a seekable Hadoop stream, and BOTH run [[walkZip]], so the
-    * honesty contracts cannot drift.
-    */
-  private[graft] trait ZipReader {
-    def length: Long
-    /** Read exactly `len` bytes at absolute `at` — throws on EOF. */
-    def readFully(at: Long, buf: Array[Byte], off: Int, len: Int): Unit
-  }
-
-  private[graft] final class ArrayZipReader(b: Array[Byte])
-      extends ZipReader {
-    def length: Long = b.length.toLong
-    def readFully(at: Long, buf: Array[Byte], off: Int,
-        len: Int): Unit = {
-      if (at < 0L || at + len > b.length)
-        throw new MalformedShardException("read past the archive")
-      System.arraycopy(b, at.toInt, buf, off, len)
-    }
-  }
-
   private[graft] def parseZip(bytes: Array[Byte],
       maxEntryBytes: Int): Option[Vector[(String, Array[Byte], String)]] = {
     if (bytes == null || bytes.length < 22) return None
-    try Some(walkZip(new ArrayZipReader(bytes), maxEntryBytes,
+    try Some(walkZip(RandomAccess(bytes), maxEntryBytes,
       1 << 28, "<column>").toVector)
     catch { case _: MalformedShardException => None }
   }
 
-  /** The SINGLE ZIP state machine over random access: locate the
-    * EOCD (through ≤64 KiB of trailing comment), follow the ZIP64
+  /** The SINGLE ZIP state machine over [[RandomAccess]] — the column
+    * operator wraps a byte array, the path-level source
+    * (`sources.ZipShardSource`) an open Hadoop stream, so the honesty
+    * contracts cannot drift. Locate the EOCD (through ≤64 KiB of
+    * trailing comment), follow the ZIP64
     * locator/record when sentinel fields demand it, materialize the
     * CENTRAL directory (≤ `maxCdBytes` — the authoritative member
     * list), then per member seek to its local header, read the
@@ -117,7 +91,7 @@ object Zip {
     * Structural violations throw [[MalformedShardException]]; the
     * column operator maps that to emit-nothing.
     */
-  private[graft] def walkZip(in: ZipReader, maxEntryBytes: Int,
+  private[graft] def walkZip(in: RandomAccess, maxEntryBytes: Int,
       maxCdBytes: Int, shard: String)
       : Iterator[(String, Array[Byte], String)] = {
     def fail(why: String): Nothing =

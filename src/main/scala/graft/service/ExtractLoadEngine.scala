@@ -57,19 +57,15 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   // pre_clean (A1), parse_count (the one parse aggregation, stats bounds
   // included), write_features (all layer writes), metadata (K8/K9), stats
   // (A3, the stats-row write), process_files total.
-  private val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+  // Each load accumulates into its own map and publishes it whole when
+  // it ends, so loads overlapping on one engine (QueueSubscription runs
+  // two) never clear or add to each other's stages.
+  @volatile private var stageTimings = Map.empty[String, Double]
 
-  /** Stage wall times (seconds) of the most recent load on this engine. */
-  def lastStageTimings: Map[String, Double] = timings.synchronized(timings.toMap)
-
-  private def timed[T](stage: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body
-    finally timings.synchronized {
-      timings(stage) =
-        timings.getOrElse(stage, 0.0) + (System.nanoTime() - t0) / 1e9
-    }
-  }
+  /** Stage wall times (seconds) of the most recent load to finish on this
+    * engine.
+    */
+  def lastStageTimings: Map[String, Double] = stageTimings
 
   def processRequest(msg: QueueMessage): LoadResponse = {
     // failures route through the terminal error translation
@@ -99,90 +95,98 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     resp
   }
 
-  def processOswDataset(msg: QueueMessage): Unit = timed("process_files") {
-    val datasetId = msg.data.tdei_dataset_id
-    val userId = msg.data.user_id
-    timings.synchronized(timings.clear())
+  def processOswDataset(msg: QueueMessage): Unit = {
+    val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+    def timed[T](stage: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      try body
+      finally timings(stage) =
+        timings.getOrElse(stage, 0.0) + (System.nanoTime() - t0) / 1e9
+    }
+    try timed("process_files") {
+      val datasetId = msg.data.tdei_dataset_id
+      val userId = msg.data.user_id
 
-    // A1: idempotent pre-clean across every table.
-    timed("pre_clean")(warehouse.deleteDatasetRecords(datasetId))
+      // A1: idempotent pre-clean across every table.
+      timed("pre_clean")(warehouse.deleteDatasetRecords(datasetId))
 
-    // 2. streamed source with the geometry transform fused in.
-    val archives = GeoJsonZipSource.archives(spark, msg.data.file_upload_path)
-    val parsed = GeoJsonZipSource.read(spark, archives, transform = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // ONE action over the parse: per entry and geometry type, counts,
-      // anchor bounds and the entry's header. Grouped inside each task
-      // (an entry never leaves its archive's task), so no shuffle.
-      val entries = timed("parse_count")(parsed
-        .select($"zip_path", $"entry_path", $"entry_seq", $"layer", $"kind",
-          $"geometry_type", $"anchor_lon", $"anchor_lat", $"header")
-        .rdd.mapPartitions(ExtractLoadEngine.groupEntries).collect().toSeq)
+      // 2. streamed source with the geometry transform fused in.
+      val archives = GeoJsonZipSource.archives(spark, msg.data.file_upload_path)
+      val parsed = GeoJsonZipSource.read(spark, archives, transform = true)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        // ONE action over the parse: per entry and geometry type, counts,
+        // anchor bounds and the entry's header. Grouped inside each task
+        // (an entry never leaves its archive's task), so no shuffle.
+        val entries = timed("parse_count")(parsed
+          .select($"zip_path", $"entry_path", $"entry_seq", $"layer", $"kind",
+            $"geometry_type", $"anchor_lon", $"anchor_lat", $"header")
+          .rdd.mapPartitions(ExtractLoadEngine.groupEntries).collect().toSeq)
 
-      // Header rows, one per entry, in archive then entry order.
-      val headers = entries.filter(_.kind == "header")
-        .sortBy(e => (archives.indexOf(e.zipPath), e.entrySeq))
-      if (headers.isEmpty)
-        throw new RuntimeException("No valid .geojson files found in dataset archive.")
-      val featureGroups = entries.filter(_.kind == "feature")
-      val liveLayers = featureGroups.map(_.layer).toSet
+        // Header rows, one per entry, in archive then entry order.
+        val headers = entries.filter(_.kind == "header")
+          .sortBy(e => (archives.indexOf(e.zipPath), e.entrySeq))
+        if (headers.isEmpty)
+          throw new RuntimeException("No valid .geojson files found in dataset archive.")
+        val featureGroups = entries.filter(_.kind == "feature")
+        val liveLayers = featureGroups.map(_.layer).toSet
 
-      // Extension-file id allocation: dense per-dataset sequence in entry
-      // order (driver-side; the reference memoizes the DB-generated id,
-      // `extract-load-service.ts:59,123,456-458`).
-      val extEntries = headers.filter(_.layer == Layer.Extension.name)
-      val extIds: Map[String, Int] =
-        extEntries.zipWithIndex.map { case (e, i) => e.entryPath -> (i + 1) }.toMap
+        // Extension-file id allocation: dense per-dataset sequence in entry
+        // order (driver-side; the reference memoizes the DB-generated id,
+        // `extract-load-service.ts:59,123,456-458`).
+        val extEntries = headers.filter(_.layer == Layer.Extension.name)
+        val extIds: Map[String, Int] =
+          extEntries.zipWithIndex.map { case (e, i) => e.entryPath -> (i + 1) }.toMap
 
-      // 3. feature writes (K1–K7), only for live layers.
-      val features = parsed.filter($"kind" === "feature")
-      timed("write_features") {
-        if (liveLayers.exists(_ != Layer.Extension.name))
-          warehouse.writeFeaturesStaged(features
-            .filter($"layer" =!= Layer.Extension.name)
-            .select(element_at(typedLit(tableByLayer), $"layer").as("layer_table"),
-              lit(datasetId).as("tdei_dataset_id"),
-              $"feature",
-              lit(userId).as("requested_by")))
-        if (liveLayers.contains(Layer.Extension.name))
-          warehouse.writeFeatures(Layer.Extension.table, features
-            .filter($"layer" === Layer.Extension.name)
-            .select(lit(datasetId).as("tdei_dataset_id"),
-              element_at(typedLit(extIds), $"entry_path").as("ext_file_id"),
-              $"feature",
-              lit(userId).as("requested_by")))
-      }
-
-      // 4a. dataset metadata row (K8): last entry per layer wins, matching
-      // the reference's sequential per-entry UPDATEs.
-      val infoByLayer: Map[String, String] =
-        headers.filter(_.layer != Layer.Extension.name)
-          .map(e => e.layer -> additionalInfo(e.header))
-          .toMap // toMap keeps the LAST value per key
-
-      val metaCols = Layer.routingOrder.map { l =>
-        lit(infoByLayer.get(l.name).orNull).cast(StringType).as(l.metaColumn.get)
-      }
-      val datasetRow = spark.range(1).select(
-        (metaCols :+ lit(datasetId).as("tdei_dataset_id")): _*)
-      timed("metadata")(warehouse.upsertByDataset("dataset", datasetRow))
-
-      // 4b. extension_file rows (K9): name = basename sans extension.
-      if (extEntries.nonEmpty) {
-        val rows = extEntries.map { e =>
-          (extIds(e.entryPath), baseNameNoExt(e.entryPath),
-            additionalInfo(e.header), userId)
+        // 3. feature writes (K1–K7), only for live layers.
+        val features = parsed.filter($"kind" === "feature")
+        timed("write_features") {
+          if (liveLayers.exists(_ != Layer.Extension.name))
+            warehouse.writeFeaturesStaged(features
+              .filter($"layer" =!= Layer.Extension.name)
+              .select(element_at(typedLit(tableByLayer), $"layer").as("layer_table"),
+                lit(datasetId).as("tdei_dataset_id"),
+                $"feature",
+                lit(userId).as("requested_by")))
+          if (liveLayers.contains(Layer.Extension.name))
+            warehouse.writeFeatures(Layer.Extension.table, features
+              .filter($"layer" === Layer.Extension.name)
+              .select(lit(datasetId).as("tdei_dataset_id"),
+                element_at(typedLit(extIds), $"entry_path").as("ext_file_id"),
+                $"feature",
+                lit(userId).as("requested_by")))
         }
-        val extDf = rows.toDF("id", "name", "file_meta", "requested_by")
-          .withColumn("tdei_dataset_id", lit(datasetId))
-        timed("metadata")(warehouse.upsertByDataset("extension_file", extDf))
-      }
 
-      // 5. stats refresh (A3) — merged from the per-entry groups.
-      if (featureGroups.nonEmpty)
-        timed("stats")(updateStats(datasetId, featureGroups))
-    } finally parsed.unpersist()
+        // 4a. dataset metadata row (K8): last entry per layer wins, matching
+        // the reference's sequential per-entry UPDATEs.
+        val infoByLayer: Map[String, String] =
+          headers.filter(_.layer != Layer.Extension.name)
+            .map(e => e.layer -> additionalInfo(e.header))
+            .toMap // toMap keeps the LAST value per key
+
+        val metaCols = Layer.routingOrder.map { l =>
+          lit(infoByLayer.get(l.name).orNull).cast(StringType).as(l.metaColumn.get)
+        }
+        val datasetRow = spark.range(1).select(
+          (metaCols :+ lit(datasetId).as("tdei_dataset_id")): _*)
+        timed("metadata")(warehouse.upsertByDataset("dataset", datasetRow))
+
+        // 4b. extension_file rows (K9): name = basename sans extension.
+        if (extEntries.nonEmpty) {
+          val rows = extEntries.map { e =>
+            (extIds(e.entryPath), baseNameNoExt(e.entryPath),
+              additionalInfo(e.header), userId)
+          }
+          val extDf = rows.toDF("id", "name", "file_meta", "requested_by")
+            .withColumn("tdei_dataset_id", lit(datasetId))
+          timed("metadata")(warehouse.upsertByDataset("extension_file", extDf))
+        }
+
+        // 5. stats refresh (A3) — merged from the per-entry groups.
+        if (featureGroups.nonEmpty)
+          timed("stats")(updateStats(datasetId, featureGroups))
+      } finally parsed.unpersist()
+    } finally stageTimings = timings.toMap
   }
 
   private val tableByLayer: Map[String, String] =

@@ -6,9 +6,7 @@ import java.util.zip.ZipInputStream
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.functions.GeoFunctions
 import graft.model.Layer
@@ -51,11 +49,12 @@ final case class ParsedRecord(
   * as a 5 MB one (one feature tree at a time).
   *
   * Parallelism: the resolved path list is sliced straight into
-  * `min(archives, defaultParallelism)` partitions (`parallelize`: no
-  * shuffle, no extra job), so each task streams one archive while
-  * archives ≤ cores. The unit of work is the archive, matching the
-  * reference's job-per-ZIP model; a single ZIP is one task, since a
-  * streamed ZIP has no central directory to split on.
+  * `min(archives, defaultParallelism)` partitions by
+  * [[StreamUtil.scanFiles]] (`parallelize`: no shuffle, no extra
+  * job), so each task streams one archive while archives ≤ cores. The
+  * unit of work is the archive, matching the reference's job-per-ZIP
+  * model; a single ZIP is one task, since a streamed ZIP has no
+  * central directory to split on.
   *
   * With `transform = true` the per-feature geometry rewrite (P7) is FUSED
   * into the parse loop: the feature tree Jackson just built is rewritten
@@ -95,37 +94,9 @@ object GeoJsonZipSource {
   def read(spark: SparkSession, files: Seq[String],
       transform: Boolean): Dataset[ParsedRecord] = {
     import spark.implicits._
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism =
-      math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(spark.sparkContext.parallelize(files, parallelism))
-      .flatMap { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val in = fs.open(fsPath)
-        val zin = new ZipInputStream(in)
-        // Failure backstop: close at task end. The happy path closes
-        // eagerly below — a task that iterates many archives must not
-        // hold every file descriptor until the task finishes.
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => zin.close()))
-        closeOnExhaustion(expandZipStream(p, zin, transform), zin)
-      }
-  }
-
-  /** Expand a (path, content) DataFrame of already-materialized ZIP blobs
-    * (e.g. a `binaryFile` scan or binary column) into ParsedRecords.
-    */
-  def expand(zips: DataFrame, transform: Boolean = false): Dataset[ParsedRecord] = {
-    val spark = zips.sparkSession
-    import spark.implicits._
-    zips
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (zipPath, content) =>
-        expandZipStream(zipPath,
-          new ZipInputStream(new ByteArrayInputStream(content)), transform)
-      }
+    StreamUtil.scanFiles(spark, files)(f => new ZipInputStream(f.stream)) {
+      (f, zin) => expandZipStream(f.path, zin, transform)
+    }
   }
 
   /** Expand in-memory ZIP bytes (tests / small fixtures). */
@@ -240,10 +211,6 @@ object GeoJsonZipSource {
       }
     }
   }
-
-  private def closeOnExhaustion[T](it: Iterator[T],
-      closeable: java.io.Closeable): Iterator[T] =
-    StreamUtil.closeOnExhaustion(it, closeable)
 
   /** Jackson closes the stream it parses by default; the ZipInputStream
     * must survive to serve the next entry.

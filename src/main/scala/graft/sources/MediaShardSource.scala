@@ -2,8 +2,6 @@ package graft.sources
 
 import java.io.BufferedInputStream
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -29,12 +27,14 @@ final case class MediaShardMeta(shard_path: String, file_bytes: Long,
   * still honest for its grammar:
   *
   *  - **prefix** (AVI, WAV, AIFF, FLAC, AVIF/HEIF, WebM/Matroska):
-  *    metadata leads the file — an ESCALATING bounded header read
-  *    (64 KB first, the `maxHeaderBytes` cap only when the small
-  *    prefix honestly refuses), parsed with the true file length
-  *    through [[Media.mediaMetaPrefix]] (the column prefix path's
-  *    exact dispatch). Residency O(prefix) whatever the file size;
-  *    I/O O(64 KB) for the common front-loaded file.
+  *    metadata leads the file — the ESCALATING bounded header read
+  *    [[graft.io.RandomAccess.parsePrefix]] (64 KB first, the
+  *    `maxHeaderBytes` cap only when the small prefix honestly
+  *    refuses; spec-pinned on a forced-escalation fixture), parsed
+  *    with the true file length through [[Media.mediaMetaPrefix]]
+  *    (the column prefix path's exact dispatch). Residency O(prefix)
+  *    whatever the file size; I/O O(64 KB) for the common
+  *    front-loaded file.
   *  - **seek** (MP4/ISO-BMFF): indexed grammar, moov may trail the
   *    mdat — [[Mp4.parseMp4Seek]] hops box headers and reads only
   *    the moov ([[Mp4ShardSource]]'s engine). Residency
@@ -67,7 +67,8 @@ final case class MediaShardMeta(shard_path: String, file_bytes: Long,
 object MediaShardSource {
 
   /** Census row for every file matched by `path` (file, glob, or
-    * directory). Parallelism comes from many files, one per task.
+    * directory). Parallelism comes from many files, sliced one per
+    * task by [[StreamUtil.scanFiles]].
     */
   def metaScan(spark: SparkSession, path: String,
       maxHeaderBytes: Int = 8 << 20,
@@ -77,112 +78,54 @@ object MediaShardSource {
     require(maxHeaderBytes >= 512, "maxHeaderBytes must cover a sniff")
     require(maxMoovBytes > 0 && maxEsScanBytes > 0,
       "caps must be positive")
-    val files = StreamUtil.resolveFiles(spark, path)
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism)
-      .map { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val len = fs.getFileStatus(fsPath).getLen
-        val stream = fs.open(fsPath)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => stream.close()))
-        def refused(route: String) = MediaShardMeta(p, len, "", 0L,
-          0, 0, "", "", 0, route, parsed = false)
-        val row = try {
-          val sniffLen = math.min(len, 512L).toInt
-          val sniff = new Array[Byte](sniffLen)
-          if (sniffLen > 0) stream.readFully(0L, sniff, 0, sniffLen)
-          val route = Media.routeOf(sniff, len)
-          val meta: Option[Media.MediaMeta] = route match {
-            case "prefix" =>
-              // Escalating read: for most prefix families the
-              // metadata sits in the first tens of KB (FLAC's
-              // STREAMINFO in 42 bytes, WAV/AIFF fmt chunks within a
-              // few hundred, AVI's hdrl and Matroska's Info near the
-              // front), so read 64 KB first and escalate to the full
-              // cap only when the small prefix honestly refuses — a
-              // drop directory of a million WAVs costs 64 KB per
-              // file, not `maxHeaderBytes`. A small-prefix success
-              // means every field-bearing chunk/box the parser uses
-              // sat inside 64 KB; only a NON-STANDARD layout (a
-              // duplicate fmt, a fact chunk trailing the data) could
-              // place field-bearing metadata past a successful
-              // prefix — the exact boundary caveat the single capped
-              // read always had at `maxHeaderBytes`, moved to 64 KB
-              // for the success path (spec-pinned on a forced-
-              // escalation fixture: a refusing small prefix
-              // escalates and matches the column census).
-              val small =
-                math.min(len, math.min(64L << 10,
-                  maxHeaderBytes.toLong)).toInt
-              val prefix = new Array[Byte](small)
-              stream.readFully(0L, prefix, 0, small)
-              val firstTry = Media.mediaMetaPrefix(prefix, len)
-              if (firstTry.isDefined || len <= small) firstTry
-              else {
-                val want = math.min(len, maxHeaderBytes.toLong).toInt
-                val full = new Array[Byte](want)
-                stream.readFully(0L, full, 0, want)
-                Media.mediaMetaPrefix(full, len)
-              }
-            case "seek" =>
-              val reader = new Mp4.Mp4Reader {
-                def length: Long = len
-                def readFully(at: Long, buf: Array[Byte], off: Int,
-                    n: Int): Unit = {
-                  if (at < 0L || at + n > len)
-                    throw new graft.operators.MalformedShardException(
-                      s"$p: read past the file")
-                  stream.readFully(at, buf, off, n)
-                }
-              }
-              Mp4.parseMp4Seek(reader, maxMoovBytes)
-                .map(Media.mp4ToMedia)
-            case "stream" =>
-              stream.seek(0L)
-              val buffered = new BufferedInputStream(stream, 1 << 16)
-              // five chained grammars stream: TS (packet walk), Ogg
-              // (page hop), GIF (block hop), ADTS and MP3
-              // (frame-header hops) — disambiguated by the same
-              // magics the route decision used
-              def sniffIs(s: String): Boolean =
-                s.indices.forall(i => sniff(i) == s.charAt(i).toByte)
-              // GIF8 before the TS sync check: 'G' IS 0x47, the TS
-              // sync byte — routeOf puts the GIF magic first too
-              if (sniffIs("GIF8"))
-                Gif.parseGifStream(buffered).map(g =>
-                  Media.gifToMedia(g.width, g.height, g.totalDelayCs))
-              else if ((sniff(0) & 0xFF) == 0x47)
-                MpegTs.parseTsStream(buffered, maxEsScanBytes)
-                  .map(Media.tsToMedia)
-              else if (sniffIs("OggS"))
-                Audio.parseOggStream(buffered).map {
-                  case (codec, ch, rate, granule) =>
-                    Media.oggToMedia(codec, ch, rate, granule)
-                }
-              else if ((sniff(0) & 0xFF) == 0xFF &&
-                (sniff(1) & 0xF0) == 0xF0 && (sniff(1) & 0x06) == 0)
-                MpegTs.parseAdtsStream(buffered)
-                  .map(Media.adtsToMedia)
-              else
-                graft.operators.Mp3.parseMp3Stream(buffered)
-                  .map(Media.mp3ToMedia)
-            case _ => None // unknown container
-          }
-          meta match {
-            case Some(m) => MediaShardMeta(p, len, m.container,
-              m.durationMs, m.width, m.height, m.videoCodec,
-              m.audioCodec, m.audioRate, route, parsed = true)
-            case None => refused(route)
-          }
-        } finally stream.close()
-        row
+    StreamUtil.scanPath(spark, path)(_.stream) { (f, stream) =>
+      val ra = f.randomAccess
+      val sniff = ra.head(512)
+      val route = Media.routeOf(sniff, f.length)
+      val meta: Option[Media.MediaMeta] = route match {
+        case "prefix" =>
+          ra.parsePrefix(maxHeaderBytes)(Media.mediaMetaPrefix(_, f.length))
+        case "seek" =>
+          Mp4.parseMp4Seek(ra, maxMoovBytes).map(Media.mp4ToMedia)
+        case "stream" =>
+          stream.seek(0L)
+          val buffered = new BufferedInputStream(stream, 1 << 16)
+          // five chained grammars stream: TS (packet walk), Ogg
+          // (page hop), GIF (block hop), ADTS and MP3
+          // (frame-header hops) — disambiguated by the same
+          // magics the route decision used
+          def sniffIs(s: String): Boolean =
+            s.indices.forall(i => sniff(i) == s.charAt(i).toByte)
+          // GIF8 before the TS sync check: 'G' IS 0x47, the TS
+          // sync byte — routeOf puts the GIF magic first too
+          if (sniffIs("GIF8"))
+            Gif.parseGifStream(buffered).map(g =>
+              Media.gifToMedia(g.width, g.height, g.totalDelayCs))
+          else if ((sniff(0) & 0xFF) == 0x47)
+            MpegTs.parseTsStream(buffered, maxEsScanBytes)
+              .map(Media.tsToMedia)
+          else if (sniffIs("OggS"))
+            Audio.parseOggStream(buffered).map {
+              case (codec, ch, rate, granule) =>
+                Media.oggToMedia(codec, ch, rate, granule)
+            }
+          else if ((sniff(0) & 0xFF) == 0xFF &&
+            (sniff(1) & 0xF0) == 0xF0 && (sniff(1) & 0x06) == 0)
+            MpegTs.parseAdtsStream(buffered)
+              .map(Media.adtsToMedia)
+          else
+            graft.operators.Mp3.parseMp3Stream(buffered)
+              .map(Media.mp3ToMedia)
+        case _ => None // unknown container
       }
+      Iterator.single(meta match {
+        case Some(m) => MediaShardMeta(f.path, f.length, m.container,
+          m.durationMs, m.width, m.height, m.videoCodec,
+          m.audioCodec, m.audioRate, route, parsed = true)
+        case None => MediaShardMeta(f.path, f.length, "", 0L, 0, 0, "",
+          "", 0, route, parsed = false)
+      })
+    }
   }
 
   /** [[metaScan]] projected to the column operator's

@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -40,8 +38,9 @@ final case class Mp4ShardMeta(shard_path: String, file_bytes: Long,
   * honesty gate: a moov larger than `maxMoovBytes` refuses
   * (`parsed = false`) rather than buffering unbounded.
   *
-  * Parallelism comes from many files (one per task); the per-file
-  * walk is a handful of positioned header reads plus one moov read.
+  * Parallelism comes from many files, sliced one per task by
+  * [[StreamUtil.scanFiles]]; the per-file walk is a handful of
+  * positioned header reads plus one moov read.
   */
 object Mp4ShardSource {
 
@@ -53,42 +52,17 @@ object Mp4ShardSource {
       maxMoovBytes: Int = 1 << 28): Dataset[Mp4ShardMeta] = {
     import spark.implicits._
     require(maxMoovBytes > 0, "maxMoovBytes must be positive")
-    val files = StreamUtil.resolveFiles(spark, path)
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism)
-      .map { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val len = fs.getFileStatus(fsPath).getLen
-        val stream = fs.open(fsPath)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => stream.close()))
-        val reader = new Mp4.Mp4Reader {
-          def length: Long = len
-          def readFully(at: Long, buf: Array[Byte], off: Int,
-              n: Int): Unit = {
-            if (at < 0L || at + n > len)
-              throw new graft.operators.MalformedShardException(
-                s"$p: read past the file")
-            stream.readFully(at, buf, off, n)
-          }
-        }
-        val meta =
-          try Mp4.parseMp4Seek(reader, maxMoovBytes)
-          finally stream.close()
-        meta match {
-          case Some(m) => Mp4ShardMeta(p, len, m.majorBrand,
-            m.timescale, m.duration, m.duration * 1000L / m.timescale,
-            m.tracks, m.videoCodec, m.width, m.height, m.videoFrames,
-            m.audioCodec, m.audioChannels, m.audioRate, parsed = true)
-          case None => Mp4ShardMeta(p, len, "", 0L, 0L, 0L, 0, "", 0,
-            0, 0L, "", 0, 0, parsed = false)
-        }
-      }
+    StreamUtil.scanPath(spark, path)(_.stream) { (f, _) =>
+      val len = f.length
+      Iterator.single(Mp4.parseMp4Seek(f.randomAccess, maxMoovBytes) match {
+        case Some(m) => Mp4ShardMeta(f.path, len, m.majorBrand,
+          m.timescale, m.duration, m.duration * 1000L / m.timescale,
+          m.tracks, m.videoCodec, m.width, m.height, m.videoFrames,
+          m.audioCodec, m.audioChannels, m.audioRate, parsed = true)
+        case None => Mp4ShardMeta(f.path, len, "", 0L, 0L, 0L, 0, "", 0,
+          0, 0L, "", 0, 0, parsed = false)
+      })
+    }
   }
 
   /** [[metaScan]] projected to the column operator's

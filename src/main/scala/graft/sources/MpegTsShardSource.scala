@@ -2,8 +2,6 @@ package graft.sources
 
 import java.io.BufferedInputStream
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -39,41 +37,28 @@ final case class TsShardMeta(shard_path: String, packets: Long,
 object MpegTsShardSource {
 
   /** Metadata for every capture matched by `path` (file, glob, or
-    * directory). Parallelism comes from many files; one capture is
-    * inherently serial (PAT→PMT→PES chain by position).
+    * directory). Parallelism comes from many files, sliced one per
+    * task by [[StreamUtil.scanFiles]]; one capture is inherently
+    * serial (PAT→PMT→PES chain by position).
     */
   def metaScan(spark: SparkSession, path: String,
       maxEsScanBytes: Int = 1 << 18): Dataset[TsShardMeta] = {
     import spark.implicits._
     require(maxEsScanBytes > 0, "maxEsScanBytes must be positive")
-    val files = StreamUtil.resolveFiles(spark, path)
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism)
-      .map { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val in = new BufferedInputStream(fs.open(fsPath), 1 << 16)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        val meta =
-          try MpegTs.parseTsStream(in, maxEsScanBytes)
-          finally in.close()
-        meta match {
-          case Some(t) => TsShardMeta(p, t.packets, t.programs,
-            if (t.videoPid >= 0)
-              MpegTs.tsVideoCodecName(t.videoStreamType) else "",
-            t.width, t.height, t.spsProfile, t.spsLevel,
-            if (t.audioPid >= 0)
-              MpegTs.tsAudioCodecName(t.audioStreamType) else "",
-            t.audioRate, t.audioChannels, t.durationMs, parsed = true)
-          case None => TsShardMeta(p, 0L, 0, "", 0, 0, 0, 0, "", 0, 0,
-            0L, parsed = false)
-        }
-      }
+    StreamUtil.scanPath(spark, path)(
+        f => new BufferedInputStream(f.stream, 1 << 16)) { (f, in) =>
+      Iterator.single(MpegTs.parseTsStream(in, maxEsScanBytes) match {
+        case Some(t) => TsShardMeta(f.path, t.packets, t.programs,
+          if (t.videoPid >= 0)
+            MpegTs.tsVideoCodecName(t.videoStreamType) else "",
+          t.width, t.height, t.spsProfile, t.spsLevel,
+          if (t.audioPid >= 0)
+            MpegTs.tsAudioCodecName(t.audioStreamType) else "",
+          t.audioRate, t.audioChannels, t.durationMs, parsed = true)
+        case None => TsShardMeta(f.path, 0L, 0, "", 0, 0, 0, 0, "", 0, 0,
+          0L, parsed = false)
+      })
+    }
   }
 
   /** [[metaScan]] projected to the column operator's

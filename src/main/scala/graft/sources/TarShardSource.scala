@@ -1,10 +1,8 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.BufferedInputStream
 import java.util.zip.GZIPInputStream
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -41,8 +39,9 @@ final case class ShardWdsMember(shard_path: String, stem: String,
   * emit-nothing — at 100 TB a silently half-read shard is the failure
   * mode that matters.
   *
-  * Parallelism comes from many shards (one per task); a single shard
-  * is inherently serial in any tar reader (headers chain by size).
+  * Parallelism comes from many shards, sliced one per task by
+  * [[StreamUtil.scanFiles]]; a single shard is inherently serial in
+  * any tar reader (headers chain by size).
   */
 object TarShardSource {
 
@@ -54,34 +53,19 @@ object TarShardSource {
       maxEntryBytes: Int = 1 << 28): Dataset[ShardMember] = {
     import spark.implicits._
     require(maxEntryBytes > 0, "maxEntryBytes must be positive")
-    val files = StreamUtil.resolveFiles(spark, path)
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism) // one shard per task when shards ≤ cores
-      .flatMap { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val raw = new BufferedInputStream(fs.open(fsPath), 1 << 16)
-        raw.mark(2)
-        val b0 = raw.read(); val b1 = raw.read()
-        raw.reset()
-        val in: InputStream =
-          if (b0 == 0x1F && b1 == 0x8B)
-            new GZIPInputStream(raw, 1 << 16)
-          else raw
-        // failure backstop: close at task end (the happy path closes
-        // eagerly on exhaustion below)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        StreamUtil.closeOnExhaustion(
-          Tar.streamTarEntries(in, maxEntryBytes, p).zipWithIndex.map {
-            case ((name, bytes), i) =>
-              ShardMember(p, i.toLong, name, bytes, bytes.length.toLong)
-          }, in)
+    StreamUtil.scanPath(spark, path) { f =>
+      val raw = new BufferedInputStream(f.stream, 1 << 16)
+      raw.mark(2)
+      val b0 = raw.read(); val b1 = raw.read()
+      raw.reset()
+      if (b0 == 0x1F && b1 == 0x8B) new GZIPInputStream(raw, 1 << 16)
+      else raw
+    } { (f, in) =>
+      Tar.streamTarEntries(in, maxEntryBytes, f.path).zipWithIndex.map {
+        case ((name, bytes), i) =>
+          ShardMember(f.path, i.toLong, name, bytes, bytes.length.toLong)
       }
+    }
   }
 
   /** [[members]] with WebDataset basename-stem splitting (stem = path

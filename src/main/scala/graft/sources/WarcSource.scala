@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPInputStream
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** One parsed WARC record (ISO 28500 / WARC 1.0–1.1).
@@ -63,14 +62,15 @@ final case class WetText(
   * exists in this library). Format: ISO 28500; record layout and the
   * CRLF-CRLF record separator follow the public WARC 1.1 spec.
   *
-  * Architecture mirrors [[GeoJsonZipSource]]: archive *paths* are
-  * distributed as a Dataset, and each task streams one file through a
-  * lazy record iterator — a record's block is the only buffered unit
-  * (bounded by `maxRecordBytes`), so a 1 GB WARC costs the same
-  * executor memory as a 1 MB one. Parallelism comes from MANY files —
-  * the unit Common Crawl itself shards by (100k-file segments) — so a
-  * 1000-executor cluster saturates on a directory listing without any
-  * in-file split coordination; one stream is inherently serial
+  * Architecture mirrors [[GeoJsonZipSource]]: the resolved files are
+  * sliced one per task by [[StreamUtil.scanFiles]], and each task
+  * streams one file through a lazy record iterator — a record's block
+  * is the only buffered unit (bounded by `maxRecordBytes`), so a 1 GB
+  * WARC costs the same executor memory as a 1 MB one. Parallelism
+  * comes from MANY files — the unit Common Crawl itself shards by
+  * (100k-file segments) — so a 1000-executor cluster saturates on a
+  * directory listing without any in-file split coordination; one
+  * stream is inherently serial
   * (gzip members chain back-to-back with no central directory).
   *
   * Gzip: `.warc.gz` files are member-per-record concatenations;
@@ -97,22 +97,9 @@ object WarcSource {
     */
   def read(spark: SparkSession, path: String): Dataset[WarcRecord] = {
     import spark.implicits._
-    val files = resolvePaths(spark, path)
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism =
-      math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism) // one file per task when files ≤ cores
-      .flatMap { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val raw = fs.open(fsPath)
-        val in: InputStream =
-          if (p.endsWith(".gz")) new GZIPInputStream(raw) else raw
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        StreamUtil.closeOnExhaustion(records(p, in), in)
-      }
+    StreamUtil.scanFiles(spark, resolvePaths(spark, path)) { f =>
+      if (f.path.endsWith(".gz")) new GZIPInputStream(f.stream) else f.stream
+    } { (f, in) => records(f.path, in) }
   }
 
   /** Expand a (path, content) DataFrame of already-materialized WARC
@@ -332,9 +319,10 @@ object WarcSource {
 
   /** Driver-side resolution of a path/glob/directory into files —
     * bounded driver RPCs per load; bytes stay on executors (same
-    * contract as [[GeoJsonZipSource]]). A directory is walked
-    * RECURSIVELY (`listFiles(_, recursive = true)` batches the RPCs):
-    * a crawl root is a segment *tree* — crawl-data/CC-MAIN-x/segments/
+    * contract as [[StreamUtil.resolveFiles]]). Unlike that shared
+    * resolver, a directory is walked RECURSIVELY
+    * (`listFiles(_, recursive = true)` batches the RPCs): a crawl root
+    * is a segment *tree* — crawl-data/CC-MAIN-x/segments/
     * seg/warc/part.warc.gz — and a one-level listing would silently
     * read zero files from it.
     */

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -40,53 +39,30 @@ final case class WebmShardMeta(shard_path: String, file_bytes: Long,
 object WebmShardSource {
 
   /** Header metadata for every file matched by `path` (file, glob,
-    * or directory). Parallelism comes from many files — the header
-    * read per file is one bounded sequential read, so a directory of
-    * N recordings costs N prefix reads, not N full scans.
+    * or directory). Parallelism comes from many files, sliced one per
+    * task by [[StreamUtil.scanFiles]] — the header read per file is
+    * the escalating bounded prefix read
+    * ([[graft.io.RandomAccess.parsePrefix]]: a faststart recording
+    * answers from the first 64 KB, only a header past that pays the
+    * full capped read), so a directory of N recordings costs N prefix
+    * reads, not N full scans.
     */
   def metaScan(spark: SparkSession, path: String,
       maxHeaderBytes: Int = 8 << 20): Dataset[WebmShardMeta] = {
     import spark.implicits._
     require(maxHeaderBytes >= 8, "maxHeaderBytes must cover a header")
-    val files = StreamUtil.resolveFiles(spark, path)
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism)
-      .map { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val fileLen = fs.getFileStatus(fsPath).getLen
-        // escalating read (the MediaShardSource prefix-arm rule): a
-        // faststart recording answers from the first 64 KB; only a
-        // header past that pays the full capped read
-        val small =
-          math.min(fileLen, math.min(64L << 10,
-            maxHeaderBytes.toLong)).toInt
-        val in = fs.open(fsPath)
-        val meta = try {
-          val prefix = new Array[Byte](small)
-          in.readFully(0L, prefix, 0, small)
-          val firstTry = Webm.parseWebm(prefix, fileLen)
-          if (firstTry.isDefined || fileLen <= small) firstTry
-          else {
-            val want = math.min(fileLen, maxHeaderBytes.toLong).toInt
-            val full = new Array[Byte](want)
-            in.readFully(0L, full, 0, want)
-            Webm.parseWebm(full, fileLen)
-          }
-        } finally in.close()
-        meta match {
-          case Some(m) => WebmShardMeta(p, fileLen, m.docType,
-            m.timescaleNs, m.durationMs, m.tracks, m.videoCodec,
-            m.width, m.height, m.audioCodec, m.audioChannels,
-            m.audioRate, parsed = true)
-          case None => WebmShardMeta(p, fileLen, "", 0L, 0L, 0, "", 0,
-            0, "", 0, 0, parsed = false)
-        }
-      }
+    StreamUtil.scanPath(spark, path)(_.stream) { (f, _) =>
+      val meta = f.randomAccess.parsePrefix(maxHeaderBytes)(
+        Webm.parseWebm(_, f.length))
+      Iterator.single(meta match {
+        case Some(m) => WebmShardMeta(f.path, f.length, m.docType,
+          m.timescaleNs, m.durationMs, m.tracks, m.videoCodec,
+          m.width, m.height, m.audioCodec, m.audioChannels,
+          m.audioRate, parsed = true)
+        case None => WebmShardMeta(f.path, f.length, "", 0L, 0L, 0, "",
+          0, 0, "", 0, 0, parsed = false)
+      })
+    }
   }
 
   /** [[metaScan]] projected to the column operator's

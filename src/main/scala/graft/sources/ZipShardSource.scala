@@ -1,8 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.operators.Zip
 
@@ -25,8 +23,9 @@ import graft.operators.Zip
   * ([[graft.operators.MalformedShardException]]), since members may
   * already have been emitted.
   *
-  * Parallelism comes from many archives (one per task); members
-  * within one archive read serially in CD order.
+  * Parallelism comes from many archives, sliced one per task by
+  * [[StreamUtil.scanFiles]]; members within one archive read
+  * serially in CD order.
   */
 object ZipShardSource {
 
@@ -41,35 +40,11 @@ object ZipShardSource {
     import spark.implicits._
     require(maxEntryBytes > 0, "maxEntryBytes must be positive")
     require(maxCdBytes > 0, "maxCdBytes must be positive")
-    val files = StreamUtil.resolveFiles(spark, path)
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism)
-      .flatMap { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val len = fs.getFileStatus(fsPath).getLen
-        val stream = fs.open(fsPath)
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => stream.close()))
-        val reader = new Zip.ZipReader {
-          def length: Long = len
-          def readFully(at: Long, buf: Array[Byte], off: Int,
-              n: Int): Unit = {
-            if (at < 0L || at + n > len)
-              throw new graft.operators.MalformedShardException(
-                s"$p: read past the archive")
-            stream.readFully(at, buf, off, n)
-          }
+    StreamUtil.scanPath(spark, path)(_.stream) { (f, _) =>
+      Zip.walkZip(f.randomAccess, maxEntryBytes, maxCdBytes, f.path)
+        .zipWithIndex.map { case ((name, bytes, _), i) =>
+          ShardMember(f.path, i.toLong, name, bytes, bytes.length.toLong)
         }
-        StreamUtil.closeOnExhaustion(
-          Zip.walkZip(reader, maxEntryBytes, maxCdBytes, p)
-            .zipWithIndex.map { case ((name, bytes, _), i) =>
-              ShardMember(p, i.toLong, name, bytes, bytes.length.toLong)
-            }, stream)
-      }
+    }
   }
 }

@@ -411,4 +411,35 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ds.getAs[String]("node_info") == s"""{"name":"$lastName-x"}""")
     assert(engine.warehouse.table("node").count() == 4)
   }
+
+  test("stage timings are per load when two loads overlap on one engine") {
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    // (process_files seen right after the load, the load's wall time from
+    // before the barrier to that read)
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, (Double, Double)]()
+    val engine = new ExtractLoadEngine(spark,
+      Files.createTempDirectory("graft-wh").toString) {
+      override def processOswDataset(msg: QueueMessage): Unit = {
+        val t0 = System.nanoTime()
+        barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+        super.processOswDataset(msg)
+        val stage = lastStageTimings("process_files")
+        seen.put(msg.data.tdei_dataset_id, (stage, (System.nanoTime() - t0) / 1e9))
+      }
+    }
+    val zip = writeZip(sevenLayerZip)
+    val loads = Seq("ta", "tb").map { id =>
+      val t = new Thread(() => engine.processRequest(request(zip, id)))
+      t.start(); t
+    }
+    loads.foreach(_.join(120000))
+    assert(seen.size == 2, seen)
+    // whichever load published last, its process_files lies inside the
+    // reader's window; summed stages of both loads would not
+    seen.asScala.foreach { case (id, (stage, wall)) =>
+      assert(stage <= wall, s"$id: process_files $stage s > wall $wall s")
+    }
+    assert(engine.lastStageTimings.keySet == Set("pre_clean", "parse_count",
+      "write_features", "metadata", "stats", "process_files"))
+  }
 }

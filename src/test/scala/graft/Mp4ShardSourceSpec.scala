@@ -31,10 +31,10 @@ class Mp4ShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** In-memory reader with a read-range log — the residency probe. */
   private final class ProbeReader(bytes: Array[Byte])
-      extends Mp4.Mp4Reader {
+      extends graft.io.RandomAccess {
     val reads = scala.collection.mutable.ArrayBuffer[(Long, Int)]()
     def length: Long = bytes.length.toLong
-    def readFully(at: Long, buf: Array[Byte], off: Int,
+    protected def readAt(at: Long, buf: Array[Byte], off: Int,
         n: Int): Unit = {
       reads += ((at, n))
       System.arraycopy(bytes, at.toInt, buf, off, n)

@@ -861,7 +861,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
             e.isInstanceOf[graft.expressions.NearestCentroidsExpr] ||
               e.isInstanceOf[graft.expressions.SqDistExpr]) => f
         }
-    for (name <- Seq("q_pq_int", "q_ivfpq_int", "q_knn_ivf_int",
+    for (name <- Seq("q_pq", "q_pq_int", "q_ivfpq_int", "q_knn_ivf_int",
         "q_recall_ivf_int"))
       assert(kernelInFilter(name).isEmpty,
         s"$name: centroid/distance kernel duplicated into a Filter")

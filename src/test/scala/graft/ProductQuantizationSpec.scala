@@ -57,6 +57,15 @@ class ProductQuantizationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(6L) == null, got.toString)
   }
 
+  test("encode on a DataFrame of another session: eval_once resolves there") {
+    val other = spark.newSession()
+    SparkSession.setActiveSession(spark)
+    val df = other.createDataFrame(Seq((1L, Seq(1.0, 1.0, 0.0, 4.0))))
+      .toDF("vec_id", "embedding")
+    val got = PQ.encode(df, "vec_id", "embedding", cb).collect()
+    assert(got.map(_.getSeq[Int](1).toList).toList == List(List(0, 0)))
+  }
+
   test("adcTopK: distances are exact table sums; self and degenerates excluded") {
     val df = vecs(
       (1L, Seq(1.0, 1.0, 0.0, 4.0)),
